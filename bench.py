@@ -181,6 +181,8 @@ def main() -> None:
     # the raw pass-A walls stay available under the ADDITIVE
     # `queries_pass_a` key and `value` keeps its exact historical pass-A
     # total meaning, so every old series remains reconstructable.
+    # `queries_protocol` names what `queries` holds ("min2"), so a reader
+    # can tell these records from pre-r12 ones without knowing the date.
 
     total = sum(timings[n] for n in HEADLINE)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -208,6 +210,7 @@ def main() -> None:
                 "wall_min2": wall_min2,
                 "queries_min2": queries_min2,
                 "queries": queries_min2,
+                "queries_protocol": "min2",
                 "queries_pass_a": timings,
                 "suite_over_naive_nosplit": round(
                     total / timings["k04_naive_nosplit"], 3

@@ -15,47 +15,33 @@ from __future__ import annotations
 from . import registry
 from .session import get_session  # noqa: F401
 
-# Import operator modules for their registration side effects.
+# Import operator modules for their registration side effects. A module
+# that fails to import fails the package import: a silently dropped
+# module would drop its whole query family from the registry.
 from .operators import aggregations  # noqa: F401,E402
-
-_OPTIONAL_MODULES = [
-    "smart_water_management_spark.operators.joins",
-    "smart_water_management_spark.operators.windows",
-    "smart_water_management_spark.operators.relational",
-    "smart_water_management_spark.operators.skew",
-    "smart_water_management_spark.llmdata.components",
-    "smart_water_management_spark.functions.scalar",
-    "smart_water_management_spark.functions.udfs",
-    "smart_water_management_spark.sources.io_ops",
-    "smart_water_management_spark.plans.scd",
-    "smart_water_management_spark.plans.mv",
-    "smart_water_management_spark.plans.pipeline",
-    "smart_water_management_spark.streaming.ingest",
-    "smart_water_management_spark.plans.dashboard",
-    "smart_water_management_spark.plans.star_schema",
-    "smart_water_management_spark.validation.checks",
-    "smart_water_management_spark.streaming.batch_windows",
-    "smart_water_management_spark.streaming.jobs",
-    "smart_water_management_spark.ml.analytics",
-    "smart_water_management_spark.llmdata.dedup",
-    "smart_water_management_spark.llmdata.similarity",
-    "smart_water_management_spark.llmdata.text",
-    "smart_water_management_spark.llmdata.multimodal",
-    "smart_water_management_spark.llmdata.curation",
-]
-
-import importlib as _importlib
-
-# Names of optional modules that failed to import this process — consumed
-# by driver_window to distinguish "target's module absent" (skip the
-# alias) from "typo'd target" (fail fast).
-_FAILED_OPTIONAL: list[str] = []
-
-for _m in _OPTIONAL_MODULES:
-    try:
-        _importlib.import_module(_m)
-    except ModuleNotFoundError:
-        _FAILED_OPTIONAL.append(_m)  # module not built yet; registry stays partial
+from .operators import joins  # noqa: F401,E402
+from .operators import windows  # noqa: F401,E402
+from .operators import relational  # noqa: F401,E402
+from .operators import skew  # noqa: F401,E402
+from .llmdata import components  # noqa: F401,E402
+from .functions import scalar  # noqa: F401,E402
+from .functions import udfs  # noqa: F401,E402
+from .sources import io_ops  # noqa: F401,E402
+from .plans import scd  # noqa: F401,E402
+from .plans import mv  # noqa: F401,E402
+from .plans import pipeline  # noqa: F401,E402
+from .streaming import ingest  # noqa: F401,E402
+from .plans import dashboard  # noqa: F401,E402
+from .plans import star_schema  # noqa: F401,E402
+from .validation import checks  # noqa: F401,E402
+from .streaming import batch_windows  # noqa: F401,E402
+from .streaming import jobs  # noqa: F401,E402
+from .ml import analytics  # noqa: F401,E402
+from .llmdata import dedup  # noqa: F401,E402
+from .llmdata import similarity  # noqa: F401,E402
+from .llmdata import text  # noqa: F401,E402
+from .llmdata import multimodal  # noqa: F401,E402
+from .llmdata import curation  # noqa: F401,E402
 
 # Last: driver-window aliases (must see every natural registration above).
 from . import driver_window  # noqa: F401,E402

@@ -244,15 +244,4 @@ ROUND12_CANDIDATES: list[str] = [
 ]
 
 for _i, _target in enumerate(DRIVER_WINDOW, start=1):
-    try:
-        register_alias(f"a00_{_i:02d}_{_target}", _target)
-    except KeyError:
-        # Skip ONLY when an optional module failed to import (package
-        # __init__ tolerates that): its registrations are absent and the
-        # natural names slide into the vacated window slots. With a fully
-        # imported registry a missing target is a typo'd DRIVER_WINDOW
-        # entry — fail fast (registry.register_alias's contract).
-        from . import _FAILED_OPTIONAL
-
-        if not _FAILED_OPTIONAL:
-            raise
+    register_alias(f"a00_{_i:02d}_{_target}", _target)

@@ -17,6 +17,7 @@ tests drive the real decoder bit paths.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 GIF_SIGS = (b"GIF87a", b"GIF89a")
@@ -58,38 +59,24 @@ class _BitReader:
 
 
 # The LZW base table is identical for every CLEAR at a given code size;
-# rebuilding it per reset was 16% of decode_gif's profile. Bounded memo:
-# min_code_size <= 8, so at most 9 distinct tables ever exist.
-_BASE_TABLE_CACHE: dict[int, list] = {}
-
-
-def _base_table(clear: int) -> list:
-    t = _BASE_TABLE_CACHE.get(clear)
-    if t is None:
-        t = [bytes([i]) for i in range(clear)] + [b"", b""]
-        _BASE_TABLE_CACHE[clear] = t
-    return t.copy()
+# rebuilding it per reset was 16% of decode_gif's profile. min_code_size
+# <= 8, so at most 9 distinct tables ever exist. Immutable: callers copy.
+@functools.lru_cache(maxsize=None)
+def _base_table(clear: int) -> tuple:
+    return tuple(bytes([i]) for i in range(clear)) + (b"", b"")
 
 
 # Palette -> 8-bit luma translation tables (256 bytes, padded), memoized
 # per color table so the per-pixel gray loop becomes one C-speed
-# bytes.translate. Bounded: cleared if ever fed >64 distinct palettes.
-_GRAY_LUT_CACHE: dict[bytes, bytes] = {}
-
-
+# bytes.translate. Bounded LRU over distinct palettes.
+@functools.lru_cache(maxsize=64)
 def _gray_lut(lct: bytes) -> bytes:
-    t = _GRAY_LUT_CACHE.get(lct)
-    if t is None:
-        if len(_GRAY_LUT_CACHE) > 64:
-            _GRAY_LUT_CACHE.clear()
-        n = len(lct) // 3
-        t = bytes(
-            (lct[3 * i] * 299 + lct[3 * i + 1] * 587 + lct[3 * i + 2] * 114)
-            // 1000
-            for i in range(n)
-        ) + bytes(256 - n)
-        _GRAY_LUT_CACHE[lct] = t
-    return t
+    n = len(lct) // 3
+    return bytes(
+        (lct[3 * i] * 299 + lct[3 * i + 1] * 587 + lct[3 * i + 2] * 114)
+        // 1000
+        for i in range(n)
+    ) + bytes(256 - n)
 
 
 def _lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> bytearray:
@@ -101,7 +88,7 @@ def _lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> bytearray:
 
     def reset():
         nonlocal table, width
-        table = _base_table(clear)
+        table = list(_base_table(clear))
         width = min_code_size + 1
 
     width = min_code_size + 1

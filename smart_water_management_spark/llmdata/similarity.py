@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import state
 from ..registry import register
 from ..sources.catalog import fan_out, literal_df, load_table
 
@@ -166,20 +167,6 @@ def x11_cosine_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ANN index registry (the ml._KMEANS_CACHE pattern): an index is BUILT
-# once and QUERIED many times — refitting the coarse quantizer on every
-# query batch misrepresents serving cost by an order of magnitude. Keyed
-# by applicationId so models bound to stopped contexts are evicted.
-_IVF_MODEL_CACHE: dict[tuple, tuple[SparkSession, object]] = {}
-
-
-def _evict_dead_models(cache: dict) -> None:
-    from ..registry import session_is_stopped
-
-    for k in [k for k, v in cache.items() if session_is_stopped(v[0])]:
-        cache.pop(k)
-
-
 def ivf_index(
     em: DataFrame, n_cells: int = 8, seed: int = 42, cache_key: str | None = None
 ) -> tuple[DataFrame, "object"]:
@@ -188,52 +175,48 @@ def ivf_index(
     Returns (embeddings + cell column, fitted model). One-time cost; at
     scale the model is tiny (n_cells × dim) and broadcast everywhere.
     With ``cache_key`` (the dataset identity, e.g. sf_dir) the fitted
-    model is reused per session — index-build once, serve many.
+    model is memoized in the session store — an index is BUILT once and
+    QUERIED many times; refitting the coarse quantizer on every query
+    batch misrepresents serving cost by an order of magnitude.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    spark = em.sparkSession
-    key = None
-    if cache_key is not None:
-        _evict_dead_models(_IVF_MODEL_CACHE)
-        from ..sources.catalog import session_key
-
-        key = (session_key(spark), cache_key, n_cells, seed)
-        if key in _IVF_MODEL_CACHE:
-            model = _IVF_MODEL_CACHE[key][1]
-            vecs = em.select(
-                "vec_id", "label", F.col("e"), array_to_vector("e").alias("features")
-            )
-            assigned = model.transform(vecs).withColumnRenamed("prediction", "cell")
-            return assigned.drop("features"), model
-
     vecs = em.select(
         "vec_id", "label", F.col("e"), array_to_vector("e").alias("features")
-    ).persist()  # fit sample + assignment re-scan; pin once
-    # Fit the coarse quantizer on a BOUNDED, canonically-ordered,
-    # single-partition sample (md5-ordered limit — same device as the PQ
-    # codebook fit): k-means|| init samples per partition and float
-    # partial sums reduce in partition order, so fitting on the raw
-    # distributed corpus makes the centroids a function of physical
-    # layout. A fixed sample in one sorted partition pins the model for
-    # any partitioning (asserted by test_rowsonly_fixed_seed_determinism)
-    # and is also the 100 TB shape: n_cells × dim centroids never need
-    # the full corpus, only a representative bounded sample.
-    fit_sample = (
-        vecs.select("vec_id", "features")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(IVF_FIT_SAMPLE)
-        .repartition(1)
-        .sortWithinPartitions("vec_id")
     )
-    model = KMeans(
-        k=n_cells, seed=seed, featuresCol="features", maxIter=10
-    ).fit(fit_sample)
+
+    def fit():
+        vecs.persist()  # the fit sample's ordered scan; pin once
+        # Fit the coarse quantizer on a BOUNDED, canonically-ordered,
+        # single-partition sample (md5-ordered limit — same device as the
+        # PQ codebook fit): k-means|| init samples per partition and float
+        # partial sums reduce in partition order, so fitting on the raw
+        # distributed corpus makes the centroids a function of physical
+        # layout. A fixed sample in one sorted partition pins the model for
+        # any partitioning (asserted by test_rowsonly_fixed_seed_determinism)
+        # and is also the 100 TB shape: n_cells × dim centroids never need
+        # the full corpus, only a representative bounded sample.
+        fit_sample = (
+            vecs.select("vec_id", "features")
+            .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+            .limit(IVF_FIT_SAMPLE)
+            .repartition(1)
+            .sortWithinPartitions("vec_id")
+        )
+        model = KMeans(
+            k=n_cells, seed=seed, featuresCol="features", maxIter=10
+        ).fit(fit_sample)
+        vecs.unpersist()
+        return model
+
+    if cache_key is None:
+        model = fit()
+    else:
+        model = state.memo(
+            em.sparkSession, ("ivf", cache_key, n_cells, seed), fit
+        )
     assigned = model.transform(vecs).withColumnRenamed("prediction", "cell")
-    vecs.unpersist()
-    if key is not None:
-        _IVF_MODEL_CACHE[key] = (spark, model)
     return assigned.drop("features"), model
 
 
@@ -976,11 +959,6 @@ PQ_M = 16  # subspaces (64-dim embeddings -> 16 chunks of 4 dims)
 PQ_KS = 16  # centroids per subspace (4-bit codes)
 
 
-# Codebooks are pure numpy fitted from a deterministic bounded sample, so
-# the cache key needs only the dataset identity — no session binding.
-_PQ_BOOK_CACHE: dict[tuple, "object"] = {}
-
-
 def pq_codebooks(
     em: DataFrame,
     m: int = PQ_M,
@@ -997,12 +975,16 @@ def pq_codebooks(
     codebooks are m*ks*dsub floats (~4 KB here) while the corpus never
     leaves the executors. Lloyd iterations run in numpy on the sample
     (deterministic seed, fixed iteration count — no convergence
-    nondeterminism across machines)."""
+    nondeterminism across machines). With ``cache_key`` the codebooks are
+    memoized in the session store."""
     import numpy as np
 
-    key = (cache_key, m, ks, seed) if cache_key is not None else None
-    if key is not None and key in _PQ_BOOK_CACHE:
-        return _PQ_BOOK_CACHE[key]
+    if cache_key is not None:
+        return state.memo(
+            em.sparkSession,
+            ("pq", cache_key, m, ks, seed),
+            lambda: pq_codebooks(em, m, ks, seed),
+        )
 
     sample_rows = (
         em.select("vec_id", "e")
@@ -1028,8 +1010,6 @@ def pq_codebooks(
                 if mask.any():
                     c[k] = xs[mask].mean(axis=0)
         books[j] = c
-    if key is not None:
-        _PQ_BOOK_CACHE[key] = books
     return books
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import state
 from ..functions.numeric import dsum, sql_davg, sql_dstddev, sql_dsum
 from ..registry import register
 from ..sources.catalog import load_table
@@ -75,27 +76,10 @@ def fit_kmeans(ev: DataFrame, k: int = 5):
 # The behavior-clustering model is deterministic (seed=42, same input),
 # and both m01 (cluster profile) and m02 (anomaly scoring) consume it —
 # a model-registry pattern: fit once per (session, dataset), reuse.
-# Keyed by applicationId (not id(spark)): object addresses get reused
-# after a session is stopped, which would hand a new session a model
-# bound to the dead context.
-_KMEANS_CACHE: dict[tuple[str, str], tuple[SparkSession, object]] = {}
-
-
 def _cached_kmeans(spark: SparkSession, sf_dir: str):
-    from ..registry import session_is_stopped
-    from ..sources.catalog import session_key
-
-    # Evict models fitted under stopped sessions: their JVM-side model
-    # objects are bound to dead contexts, and a long-lived driver cycling
-    # sessions would otherwise accumulate them without bound.
-    for k in [k for k, (sess, _) in _KMEANS_CACHE.items()
-              if session_is_stopped(sess)]:
-        _KMEANS_CACHE.pop(k)
-    key = (session_key(spark), sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    if key not in _KMEANS_CACHE:
-        _KMEANS_CACHE[key] = (spark, fit_kmeans(ev)[0])
-    return _KMEANS_CACHE[key][1], _features(ev)
+    model = state.memo(spark, ("kmeans", sf_dir), lambda: fit_kmeans(ev)[0])
+    return model, _features(ev)
 
 
 def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

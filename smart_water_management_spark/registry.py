@@ -24,6 +24,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import state
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -55,17 +57,6 @@ _SMALL_INPUT_BYTES = 8 * 1024 * 1024
 _SMALL_INPUT_PARTITIONS = 8
 _INPUT_BYTES_CACHE: dict[str, tuple[int, int | None]] = {}
 _POSTURE = os.environ.get("SWM_POSTURE", "auto")
-
-
-def session_is_stopped(spark: SparkSession) -> bool:
-    """True when the session's SparkContext has been stopped — used by the
-    engine's driver-side caches (saved confs, persisted scans, fitted
-    models) to evict entries bound to dead contexts in long-lived driver
-    processes."""
-    try:
-        return spark.sparkContext._jsc is None
-    except Exception:
-        return True
 
 
 def set_posture(posture: str) -> None:
@@ -116,12 +107,10 @@ def small_input(sf_dir: str) -> bool:
     return nbytes is not None and nbytes < _SMALL_INPUT_BYTES
 
 
-# The session's own posture, captured before the first small-input
-# override so a later large-input query RESTORES it — without this the
-# small-input settings would stick for the rest of the session and
-# silently degrade every subsequent at-scale query. Keyed by
-# applicationId: unique per SparkContext, unlike a reusable id().
-_SAVED_CONF: dict[str, tuple[SparkSession, dict[str, str]]] = {}
+# The session's own posture, captured in its store before the first
+# small-input override so a later large-input query RESTORES it — without
+# this the small-input settings would stick for the rest of the session and
+# silently degrade every subsequent at-scale query.
 _TUNED_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.codegen.wholeStage",
@@ -131,19 +120,14 @@ _TUNED_CONFS = (
 
 def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
     """Right-size shuffle width and codegen mode to the input scale."""
-    # Evict saved confs of stopped sessions — a long-lived driver that
-    # cycles sessions would otherwise accumulate one entry per dead
-    # context (the entry stores the session to make liveness checkable).
-    for sid_ in [s for s, (sess, _) in _SAVED_CONF.items() if session_is_stopped(sess)]:
-        _SAVED_CONF.pop(sid_)
-    sid = spark.sparkContext.applicationId
+    st = state.store(spark)
     if not small_input(sf_dir):
-        _sess, saved = _SAVED_CONF.pop(sid, (None, {}))
+        saved, st.saved_conf = st.saved_conf or {}, None
         for key, val in saved.items():
             spark.conf.set(key, val)
         return
-    if sid not in _SAVED_CONF:
-        _SAVED_CONF[sid] = (spark, {k: spark.conf.get(k) for k in _TUNED_CONFS})
+    if st.saved_conf is None:
+        st.saved_conf = {k: spark.conf.get(k) for k in _TUNED_CONFS}
     spark.conf.set("spark.sql.shuffle.partitions", str(_SMALL_INPUT_PARTITIONS))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # JIT-compiling each one-shot plan costs more than interpreting it
@@ -182,8 +166,7 @@ def register_alias(alias: str, target: str) -> None:
     """
     if alias in _REGISTRY:
         raise ValueError(f"duplicate query name: {alias}")
-    # KeyError on a typo'd target is the right failure (driver_window
-    # catches it ONLY when an optional module failed to import)
+    # KeyError on a typo'd target is the right failure
     spec = _REGISTRY[target]
     _REGISTRY[alias] = QuerySpec(
         name=alias,

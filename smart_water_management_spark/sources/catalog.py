@@ -9,10 +9,10 @@ hit hive-partitioned directories and prune on year/month/day.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import state
 
 TABLES = [
     "region",
@@ -26,38 +26,6 @@ TABLES = [
     "documents",
     "embeddings",
 ]
-
-
-# Shared-scan cache for the small-input posture: a correctness sweep or
-# benchmark suite runs hundreds of queries over the same ten MB-scale
-# tables, and re-decoding parquet per query is pure repeat cost when the
-# whole dataset fits in a fraction of executor memory. Entries are lazy
-# (`persist()` — materialized by each table's first action). Production
-# posture bypasses this entirely: at 100 TB you stream the scan, prune
-# columns/partitions, and never pin base tables.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-# Plan-level memo used at EVERY posture: maps (session, sf_dir, table) to
-# the analyzed scan DataFrame. Unlike _TABLE_CACHE this never persists —
-# it only reuses the resolved file index + parquet footer schema, the same
-# thing a metastore catalog table provides, so repeated queries (a
-# dashboard refresh loop, a bench pass) skip ~80 ms of driver-side file
-# listing per table per call. Data still streams through the scan. The
-# testdata directories are read-only for the engine, so the resolved file
-# index cannot go stale mid-session (clear_table_cache evicts it anyway
-# for callers that rewrite a dir they previously scanned). LRU-bounded:
-# keys are (session, sf_dir, table), so a long-lived driver touching many
-# sf_dirs would otherwise accumulate analyzed plans without limit.
-_PLAN_CACHE: "OrderedDict[tuple[str, str, str], DataFrame]" = OrderedDict()
-_PLAN_CACHE_MAX = 256
-
-
-def session_key(spark: SparkSession) -> str:
-    """Stable identity for cache keys. NOT id(spark): CPython reuses
-    object addresses, so a new session can alias a stopped one's cache
-    entries (whose lineage points at a dead SparkContext); the
-    applicationId is unique per context."""
-    return spark.sparkContext.applicationId
 
 
 def normalize_event_ts(df: DataFrame):
@@ -102,128 +70,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     from ..registry import small_input
 
-    _evict_dead_entries()
-    key = (session_key(spark), sf_dir, name)
-    if not small_input(sf_dir):
-        if key not in _PLAN_CACHE:
-            _PLAN_CACHE[key] = _read_table(spark, sf_dir, name)
-            while len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-                _PLAN_CACHE.popitem(last=False)
-        else:
-            _PLAN_CACHE.move_to_end(key)
-        return _PLAN_CACHE[key]
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = _read_table(spark, sf_dir, name).persist()
-    return _TABLE_CACHE[key]
-
-
-def _evict_dead_entries() -> None:
-    """Drop cached scans whose SparkContext has been stopped — their
-    persisted blocks died with the context, and a long-lived driver that
-    cycles sessions would otherwise accumulate dead entries forever
-    (clear_table_cache only covers the CURRENT session's keys)."""
-    from ..registry import session_is_stopped
-
-    for key in [k for k, df in _TABLE_CACHE.items()
-                if session_is_stopped(df.sparkSession)]:
-        _TABLE_CACHE.pop(key)
-        _PIN_LRU.pop(key, None)
-    for key in [k for k, df in _PLAN_CACHE.items()
-                if session_is_stopped(df.sparkSession)]:
-        _PLAN_CACHE.pop(key)
-
-
-# LRU order of the derived pins (pin_derived) — least-recently-used first.
-# Governs ONLY derived pins; base-table scans under the small-input posture
-# are a fixed, bounded set (the ten MB-scale testdata tables) and are not
-# evicted by the budget.
-_PIN_LRU: "OrderedDict[tuple[str, str, str], None]" = OrderedDict()
-
-
-def _pin_budget_bytes() -> int:
-    """Session pin budget (VERDICT r11 item 3: pins accumulated per session
-    with no cap — fine at sf0.1 in a 16 GB driver, a scale risk at 100 TB).
-    Scale-parameterised via env with a local default sized to the sandbox;
-    production deployments set it to a fraction of executor storage memory."""
-    import os
-
-    return int(os.environ.get("SWM_PIN_BUDGET_BYTES", str(4 * 1024**3)))
-
-
-def _cached_bytes(spark: SparkSession) -> int:
-    """Total bytes currently materialized in the block manager (memory +
-    disk) across all persisted RDDs/DataFrames of this session. Lazy pins
-    that have not run an action yet report 0 — they hold no blocks."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return sum(i.memSize() + i.diskSize() for i in infos)
-
-
-def _enforce_pin_budget(spark: SparkSession, keep) -> None:
-    """Evict least-recently-used derived pins until the session's
-    materialized cache fits the budget (never the pin just requested).
-    Eviction is safe: a pinned frame is a pure function of the parquet
-    inputs, so consumers recompute on next use — the budget trades repeat
-    compute for bounded memory, exactly the 100 TB posture."""
-    budget = _pin_budget_bytes()
-    sess = session_key(spark)
-    while _cached_bytes(spark) > budget:
-        victim = next(
-            (k for k in _PIN_LRU if k[0] == sess and k != keep), None
-        )
-        if victim is None:
-            break  # nothing evictable left (base scans are not governed)
-        _PIN_LRU.pop(victim)
-        df = _TABLE_CACHE.pop(victim, None)
-        if df is not None:
-            df.unpersist()
+    # Small-input posture: the whole dataset fits in a fraction of executor
+    # memory and a sweep re-reads the same ten tables hundreds of times, so
+    # the scan is pinned. Otherwise only the analyzed scan is memoized: it
+    # reuses the resolved file index and footer schema (~80 ms of driver
+    # file listing per table per call) while data still streams through
+    # the scan. At 100 TB base tables are never pinned.
+    key = ("scan", sf_dir, name)
+    if small_input(sf_dir):
+        return state.pin(spark, key, lambda: _read_table(spark, sf_dir, name))
+    return state.memo(spark, key, lambda: _read_table(spark, sf_dir, name))
 
 
 def pin_derived(
     spark: SparkSession, sf_dir: str, name: str, build, storage_level=None
 ) -> DataFrame:
     """Persist-and-track a derived table (e.g. an exploded n-gram table
-    consumed by both sides of a self-join). Registering the pin here —
-    instead of a bare ``.persist()`` at the call site — means repeated
-    invocations reuse ONE cached copy rather than pinning a fresh one per
-    sweep, and ``clear_table_cache`` / dead-session eviction release it.
-
-    r12: pins are budgeted (``SWM_PIN_BUDGET_BYTES``, default 4 GiB) with
-    LRU eviction across the session's derived pins, and callers may pass
-    an explicit ``storage_level`` (default MEMORY_AND_DISK via
-    ``persist()`` — spills instead of OOMing when a pin outgrows memory).
-    The budget check runs on each pin call against the block manager's
-    real materialized bytes; a lazy pin costs nothing until its first
-    action, so enforcement naturally follows materialization order."""
-    _evict_dead_entries()
-    key = (session_key(spark), sf_dir, f"derived:{name}")
-    if key not in _TABLE_CACHE:
-        built = build()
-        _TABLE_CACHE[key] = (
-            built.persist(storage_level) if storage_level else built.persist()
-        )
-        _PIN_LRU[key] = None
-        _enforce_pin_budget(spark, keep=key)
-    elif key in _PIN_LRU:
-        _PIN_LRU.move_to_end(key)
-    return _TABLE_CACHE[key]
-
-
-def clear_table_cache(spark: SparkSession) -> None:
-    """Unpersist and forget every shared-scan cache entry.
-
-    Needed before plan inspection under the production posture: Spark's
-    CacheManager substitutes InMemoryRelation into ANY plan that matches
-    a cached fragment, so a lingering cached scan would hide the
-    pushdown/pruning behavior the physical-plan CI asserts. Also evicts
-    the session's memoized analyzed scans (_PLAN_CACHE, the non-small
-    posture path) so a "cleared" session re-resolves the file index —
-    without this, a table dir rewritten after first load would keep
-    serving the stale resolved listing."""
-    for key in [k for k in _TABLE_CACHE if k[0] == session_key(spark)]:
-        _TABLE_CACHE.pop(key).unpersist()
-        _PIN_LRU.pop(key, None)
-    for key in [k for k in _PLAN_CACHE if k[0] == session_key(spark)]:
-        _PLAN_CACHE.pop(key)
+    consumed by both sides of a self-join) in the session store, so
+    repeated invocations reuse ONE cached copy under the store's pin
+    budget rather than pinning a fresh one per sweep."""
+    return state.pin(spark, ("derived", sf_dir, name), build, storage_level)
 
 
 def literal_df(spark: SparkSession, rows, schema: str) -> DataFrame:

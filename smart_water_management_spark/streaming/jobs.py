@@ -24,14 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import state
 from ..registry import register
 
 _DEC = "decimal(27,6)"
-
-# (applicationId, sf_dir) -> (session, ts dtype) probed from the events
-# parquet footer; the session is stored to make liveness checkable for
-# eviction (same pattern as registry._SAVED_CONF).
-_TS_DTYPE_CACHE: dict[tuple[str, str], tuple[SparkSession, object]] = {}
 
 # Events schema as the streaming source sees it. ``ts``'s declared type
 # depends on the generator's parquet physical type: TIMESTAMP(NANOS) files
@@ -92,17 +88,13 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Footer-only batch read to learn the physical ts type (bigint = NANOS
     # via the legacy flag, timestamp_ntz = MICROS) — no data scan, but
-    # still a parquet metadata round-trip per call, so cache the dtype per
+    # still a parquet metadata round-trip per call, so memoize the dtype per
     # (session, sf_dir): t12 alone builds two streams over the same table.
-    from ..registry import session_is_stopped
-
-    for key in [k for k, (sess, _) in _TS_DTYPE_CACHE.items() if session_is_stopped(sess)]:
-        _TS_DTYPE_CACHE.pop(key)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key not in _TS_DTYPE_CACHE:
-        probe = spark.read.parquet(target)
-        _TS_DTYPE_CACHE[cache_key] = (spark, probe.schema["ts"].dataType)
-    ts_dtype = _TS_DTYPE_CACHE[cache_key][1]
+    ts_dtype = state.memo(
+        spark,
+        ("events_ts_dtype", sf_dir),
+        lambda: spark.read.parquet(target).schema["ts"].dataType,
+    )
     raw = (
         spark.readStream.schema(_raw_schema(ts_dtype))
         .option("maxFilesPerTrigger", 1)

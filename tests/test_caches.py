@@ -1,41 +1,97 @@
-"""Driver-side cache hygiene: the table/plan caches in sources.catalog and
-the prepared-statement memo in plans.dashboard must stay bounded and must
-actually empty when a caller clears them (VERDICT r5 ADVICE items)."""
+"""Session-state hygiene: every structure the engine reuses across one
+session's queries lives in that session's store (``state``), which must
+stay bounded, empty on ``clear`` and vanish with its session."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+from smart_water_management_spark import state
 from smart_water_management_spark.plans import dashboard
 from smart_water_management_spark.sources import catalog
 
+from .conftest import SF_DIR
 
-def test_clear_table_cache_evicts_plan_cache_too(spark):
-    """clear_table_cache is the 'rescan fresh layout' hook used before the
-    physical-plan assertions; under the non-small posture scans memoize in
-    _PLAN_CACHE (not _TABLE_CACHE), so clearing must cover both or a
-    rewritten table dir keeps serving the stale resolved file index."""
-    key = (catalog.session_key(spark), "/root/testdata/sf0.001", "region")
-    catalog._PLAN_CACHE[key] = catalog._read_table(
-        spark, "/root/testdata/sf0.001", "region"
+
+def test_clear_evicts_memo_and_pins(spark):
+    """``clear`` is the 'rescan fresh layout' hook used before the
+    physical-plan assertions: it must drop the memoized analyzed scans
+    (or a rewritten table dir keeps serving the stale resolved file
+    index) and unpersist every pin, fitted models included."""
+    state.memo(spark, ("scan", "/clear-test", "region"),
+               lambda: catalog._read_table(spark, SF_DIR, "region"))
+    state.memo(spark, ("kmeans", "/clear-test"), lambda: object())
+    pinned = catalog.pin_derived(spark, "/clear-test", "p", lambda: spark.range(10))
+    state.clear(spark)
+    st = state.store(spark)
+    assert not st.memo and not st.pins and not st.pin_rdds
+    assert pinned.storageLevel.useMemory is False
+
+
+def test_stopped_session_store_is_dropped():
+    """A stopped session's whole store is dropped the next time any
+    session uses the module — a stub session stands in so the suite's
+    shared session stays up."""
+    ctx = SimpleNamespace(_jsc=object(), applicationId="stub-app")
+    stub = SimpleNamespace(sparkContext=ctx)
+    assert state.memo(stub, "k", lambda: 1) == 1
+    assert "stub-app" in state._STORES
+    other = SimpleNamespace(
+        sparkContext=SimpleNamespace(_jsc=object(), applicationId="other-app")
     )
-    catalog.clear_table_cache(spark)
-    assert key not in catalog._PLAN_CACHE
-    assert not [k for k in catalog._TABLE_CACHE if k[0] == key[0]]
+    try:
+        state.memo(other, "k", lambda: 2)
+        assert "stub-app" in state._STORES  # live: kept
+        ctx._jsc = None  # SparkContext.stop() clears _jsc
+        state.memo(other, "k", lambda: 3)
+        assert "stub-app" not in state._STORES
+    finally:
+        state._STORES.pop("stub-app", None)
+        state._STORES.pop("other-app", None)
 
 
-def test_plan_memo_is_lru_bounded(spark):
+def test_memo_is_lru_bounded(spark):
+    """One LRU of MEMO_MAX entries per session: a long-lived session
+    issuing varied keys must not grow it without limit, and a hit
+    refreshes recency."""
+    state.clear(spark)
+    try:
+        for i in range(state.MEMO_MAX + 32):
+            state.memo(spark, ("lru-test", i), lambda i=i: i)
+            state.memo(spark, ("lru-test", 0), lambda: -1)  # keep 0 hot
+        m = state.store(spark).memo
+        assert len(m) == state.MEMO_MAX
+        assert ("lru-test", 0) in m and m[("lru-test", 0)] == 0
+        assert ("lru-test", 1) not in m  # least recently used went first
+        assert ("lru-test", state.MEMO_MAX + 31) in m
+    finally:
+        state.clear(spark)
+
+
+def test_plan_memo_is_lru_bounded(spark, monkeypatch):
     """The dashboard prepared-statement memo is keyed by raw SQL text; a
     session issuing varied ad-hoc SQL must not grow it without limit."""
-    dashboard._PLAN_MEMO.clear()
-    for i in range(dashboard._PLAN_MEMO_MAX + 32):
-        dashboard._sql(
-            spark, "/root/testdata/sf0.001", f"SELECT {i} AS v", tables=[]
-        )
-    assert len(dashboard._PLAN_MEMO) == dashboard._PLAN_MEMO_MAX
-    # Most-recent entries survive; the earliest were evicted first.
-    sqls = {k[2] for k in dashboard._PLAN_MEMO}
-    assert f"SELECT {dashboard._PLAN_MEMO_MAX + 31} AS v" in sqls
-    assert "SELECT 0 AS v" not in sqls
-    dashboard._PLAN_MEMO.clear()
+    monkeypatch.setattr(state, "MEMO_MAX", 16)
+    state.clear(spark)
+    try:
+        for i in range(state.MEMO_MAX + 8):
+            dashboard._sql(
+                spark, SF_DIR, f"SELECT {i} AS v", tables=[]
+            )
+        memo = state.store(spark).memo
+        assert len(memo) == state.MEMO_MAX
+        # Most-recent entries survive; the earliest were evicted first.
+        sqls = {k[2] for k in memo if k[0] == "sql"}
+        assert f"SELECT {state.MEMO_MAX + 7} AS v" in sqls
+        assert "SELECT 0 AS v" not in sqls
+    finally:
+        state.clear(spark)
+
+
+def _pin_bytes(spark, df) -> int:
+    rdd_id = state._pin_rdd_id(spark, df)
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return next(i.memSize() + i.diskSize() for i in infos if i.id() == rdd_id)
 
 
 def test_pin_derived_budget_evicts_lru(spark, monkeypatch):
@@ -46,56 +102,102 @@ def test_pin_derived_budget_evicts_lru(spark, monkeypatch):
     must be evicted (unpersisted + dropped) as soon as a newer
     materialized pin exceeds the budget, while the requested pin itself
     always survives its own call."""
-    monkeypatch.setenv("SWM_PIN_BUDGET_BYTES", "1")
-    sess = catalog.session_key(spark)
+    monkeypatch.setattr(state, "_pin_budget_bytes", lambda spark: 1)
+    pins = state.store(spark).pins
     try:
         a = catalog.pin_derived(
             spark, "/budget-test", "pin_a",
             lambda: spark.range(10_000).selectExpr("id", "id * 2 AS v"),
         )
         a.count()  # materialize: pin_a now holds blocks > 1 byte
-        key_a = (sess, "/budget-test", "derived:pin_a")
-        assert key_a in catalog._TABLE_CACHE
+        key_a = ("derived", "/budget-test", "pin_a")
+        assert key_a in pins
         b = catalog.pin_derived(
             spark, "/budget-test", "pin_b",
             lambda: spark.range(10_000).selectExpr("id", "id * 3 AS v"),
         )
         # pin_a (LRU, materialized, over budget) was evicted; pin_b — the
         # pin just requested — is never its own victim.
-        assert key_a not in catalog._TABLE_CACHE
-        assert (sess, "/budget-test", "derived:pin_b") in catalog._TABLE_CACHE
+        assert key_a not in pins
+        assert ("derived", "/budget-test", "pin_b") in pins
         assert a.storageLevel.useMemory is False  # really unpersisted
         b.count()
         # a later unrelated pin call now evicts the materialized pin_b too
         catalog.pin_derived(
             spark, "/budget-test", "pin_c", lambda: spark.range(10)
         )
-        assert (sess, "/budget-test", "derived:pin_b") not in catalog._TABLE_CACHE
+        assert ("derived", "/budget-test", "pin_b") not in pins
     finally:
-        catalog.clear_table_cache(spark)
+        state.clear(spark)
+
+
+def test_pin_budget_meters_only_owned_pins(spark, monkeypatch):
+    """The pin budget meters only the cached RDDs the store owns,
+    and eviction is blocking, so a resident block the store does not own
+    (a localCheckpoint here) cannot make the pins thrash, and one
+    over-budget call evicts exactly the LRU pins, each once."""
+    state.clear(spark)
+    ckpt = spark.range(200_000).selectExpr("id", "id * 5 AS v").localCheckpoint()
+    evicted = []
+    frame_cls = type(ckpt)  # the concrete (classic) DataFrame class
+    real_unpersist = frame_cls.unpersist
+
+    def spy(self, blocking=False):
+        evicted.append(self)
+        return real_unpersist(self, blocking)
+
+    try:
+        built = {}
+        for name in ("a", "b", "c"):
+            df = catalog.pin_derived(
+                spark, "/owned-test", name,
+                lambda n=len(name) + ord(name): spark.range(20_000)
+                .selectExpr("id", f"id * {n} AS v"),
+            )
+            df.count()
+            built[name] = df
+        sizes = {n: _pin_bytes(spark, df) for n, df in built.items()}
+        budget = sizes["b"] + sizes["c"]
+        foreign = sum(
+            i.memSize() + i.diskSize()
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        ) - sum(sizes.values())
+        assert foreign > budget  # the checkpoint alone is over budget
+        monkeypatch.setattr(state, "_pin_budget_bytes", lambda spark: budget)
+        monkeypatch.setattr(frame_cls, "unpersist", spy)
+        catalog.pin_derived(spark, "/owned-test", "d", lambda: spark.range(10))
+        monkeypatch.setattr(frame_cls, "unpersist", real_unpersist)
+        assert evicted == [built["a"]]
+        pins = state.store(spark).pins
+        assert {k[2] for k in pins if k[1] == "/owned-test"} == {"b", "c", "d"}
+        assert ckpt.count() == 200_000  # untouched by the budget
+    finally:
+        monkeypatch.setattr(frame_cls, "unpersist", real_unpersist)
+        state.clear(spark)
 
 
 def test_plan_cache_is_lru_bounded(spark, monkeypatch):
-    """_PLAN_CACHE is keyed by (session, sf_dir, table); many tables/dirs in
-    one long-lived driver must not accumulate analyzed plans without limit.
-    Exercises the real load_table population path under the production
-    posture (the branch that memoizes plans instead of persisting)."""
+    """Analyzed scans are memoized per (session, sf_dir, table); many
+    tables/dirs in one long-lived driver must not accumulate analyzed
+    plans without limit. Exercises the real load_table population path
+    under the production posture (the branch that memoizes plans instead
+    of persisting)."""
     from smart_water_management_spark import registry
 
-    catalog._PLAN_CACHE.clear()
-    monkeypatch.setattr(catalog, "_PLAN_CACHE_MAX", 4)
+    state.clear(spark)
+    monkeypatch.setattr(state, "MEMO_MAX", 4)
     registry.set_posture("production")
     try:
         for name in ["region", "nation", "customer", "supplier", "part",
                      "orders", "lineitem"]:
-            catalog.load_table(spark, "/root/testdata/sf0.001", name)
-        assert len(catalog._PLAN_CACHE) == 4
+            catalog.load_table(spark, SF_DIR, name)
+        memo = state.store(spark).memo
+        assert len(memo) == 4
         # LRU: the most recently loaded tables survive.
-        kept = {k[2] for k in catalog._PLAN_CACHE}
-        assert kept == {"part", "orders", "lineitem", "supplier"}
+        assert {k[2] for k in memo} == {"part", "orders", "lineitem", "supplier"}
     finally:
         registry.set_posture("auto")
-        catalog._PLAN_CACHE.clear()
+        state.clear(spark)
 
 
 def test_fan_out_guard_without_rdd_at_scale(spark):

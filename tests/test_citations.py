@@ -12,6 +12,8 @@ from __future__ import annotations
 import pathlib
 import re
 
+import pytest
+
 REFERENCE = pathlib.Path("/root/reference")
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "smart_water_management_spark"
 
@@ -27,6 +29,10 @@ def _iter_citations():
             yield path, line_no, m.group(1), m.group(2), m.group(3)
 
 
+@pytest.mark.skipif(
+    not REFERENCE.is_dir(),
+    reason=f"reference checkout {REFERENCE} is absent; citations cannot be checked",
+)
 def test_every_cited_reference_path_exists():
     bad = []
     checked = 0

@@ -725,7 +725,7 @@ def test_label_cohesion_identity_vs_bruteforce(spark):
     from smart_water_management_spark.llmdata.similarity import (
         x48_label_cohesion,
     )
-    from smart_water_management_spark.sources.catalog import clear_table_cache
+    from smart_water_management_spark import state
 
     vecs = {
         0: [[1.0, 0.0, 0.0], [0.9, 0.1, 0.0], [0.95, 0.05, 0.1]],  # tight
@@ -752,14 +752,14 @@ def test_label_cohesion_identity_vs_bruteforce(spark):
         spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int"
         ).write.parquet(os.path.join(tmp, "embeddings.parquet"))
-        clear_table_cache(spark)
+        state.clear(spark)
         try:
             got = {
                 r.label: r.mean_intra_dot
                 for r in x48_label_cohesion(spark, tmp).collect()
             }
         finally:
-            clear_table_cache(spark)
+            state.clear(spark)
     for label, exp in expected.items():
         assert abs(got[label] - exp) < 1e-4, (label, got[label], exp)
     assert got[0] > got[1]  # tight label coheres more than the spread one

@@ -85,11 +85,17 @@ _HEADLINE = [
 def _default_subset() -> set[str]:
     from smart_water_management_spark.driver_window import DRIVER_WINDOW
 
+    # a misspelled name must fail here, not silently shrink the gate
+    for group, names in (("DRIVER_WINDOW", DRIVER_WINDOW),
+                         ("_HEADLINE", _HEADLINE),
+                         ("ROUND_TOUCHED", ROUND_TOUCHED)):
+        unknown = set(names) - set(ALL)
+        assert not unknown, f"{group} names unknown queries: {sorted(unknown)}"
     subset = set(DRIVER_WINDOW) | set(_HEADLINE) | set(ROUND_TOUCHED)
     # breadth: the alphabetically-first oracle-backed name per family prefix
     for prefix in sorted({n[0] for n in ALL}):
         subset.add(next(n for n in ALL if n[0] == prefix))
-    return subset & set(ALL)
+    return subset
 
 
 DEFAULT_SUBSET = _default_subset()
@@ -207,11 +213,10 @@ def test_entry_smoke(spark):
     assert set(swm.oracle_sql()).issubset(set(swm.queries()))
 
 
-def test_package_import_survives_partial_registry():
-    """If an optional module is unavailable (e.g. pyspark.ml missing for
-    ml.analytics), its registrations are absent — the driver-window aliases
-    for those targets must be SKIPPED, not crash the whole package import
-    with KeyError. Natural names then slide into the vacated window slots."""
+def test_package_import_fails_loudly_on_missing_module():
+    """A query module that fails to import must fail the package import:
+    a silently skipped module would drop its whole query family from the
+    registry (and from the driver window) without a trace."""
     import subprocess
     import sys
 
@@ -223,18 +228,13 @@ def test_package_import_survives_partial_registry():
         "            raise ModuleNotFoundError(name)\n"
         "        return None\n"
         "sys.meta_path.insert(0, Blocker())\n"
-        "import smart_water_management_spark as swm\n"
-        "qs = swm.queries()\n"
-        "assert 'm01_kmeans_clusters' not in qs, 'block failed'\n"
-        "assert not any(k.startswith('a00_') and k.endswith('m01_kmeans_clusters') for k in qs), 'alias not skipped'\n"
-        "assert 'a01_multi_agg_pricing' in qs\n"
-        "print('PARTIAL_OK', len(qs))\n"
+        "import smart_water_management_spark\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
     )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "PARTIAL_OK" in out.stdout
+    assert out.returncode != 0
+    assert "ModuleNotFoundError: smart_water_management_spark.ml.analytics" in out.stderr
 
 
 def test_readme_family_counts_match_registry():

@@ -24,10 +24,10 @@ def production_posture(spark):
     """Plan assertions check the at-scale physical plans, so the
     small-input tuning (shuffle=8, codegen off, cached scans) must not
     apply here; restore the session's compiled-execution posture."""
-    from smart_water_management_spark.sources.catalog import clear_table_cache
+    from smart_water_management_spark import state
 
     registry.set_posture("production")
-    clear_table_cache(spark)
+    state.clear(spark)
     spark.conf.set("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     yield
@@ -128,10 +128,10 @@ def registry_audit(spark):
     walkers run on every name; per-test exception lists are applied at
     ASSERT time so the allowlists stay local to their audits."""
     from smart_water_management_spark import registry as _registry
-    from smart_water_management_spark.sources.catalog import clear_table_cache
+    from smart_water_management_spark import state
 
     _registry.set_posture("production")
-    clear_table_cache(spark)
+    state.clear(spark)
     spark.conf.set("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     out = {

@@ -242,18 +242,13 @@ def test_rowsonly_fixed_seed_determinism(spark, name):
     physical layout (different shuffle width + smaller scan splits). All
     candidate generation is seed-fixed and every top-k window breaks ties
     on vec_id/doc_id, so physical parallelism must not leak into results."""
-    from smart_water_management_spark.llmdata import similarity
-    from smart_water_management_spark.sources.catalog import clear_table_cache
-
-    def _clear_model_caches():
-        # The ANN index/model registries would otherwise hand run 2 the
-        # run-1 model and make this test vacuous for the fit itself.
-        similarity._IVF_MODEL_CACHE.clear()
-        similarity._PQ_BOOK_CACHE.clear()
+    from smart_water_management_spark import state
 
     spec = _REGISTRY[name]
     base = _stable_rows(spec.fn(spark, SF_DIR))
-    _clear_model_caches()
+    # The session store would otherwise hand run 2 the run-1 ANN model and
+    # make this test vacuous for the fit itself.
+    state.clear(spark)
     again = _stable_rows(spec.fn(spark, SF_DIR))
     assert base == again, f"{name}: not deterministic across identical runs"
 
@@ -264,13 +259,12 @@ def test_rowsonly_fixed_seed_determinism(spark, name):
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
         spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-        clear_table_cache(spark)
-        _clear_model_caches()
+        state.clear(spark)
         relaid = _stable_rows(spec.fn(spark, SF_DIR))
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-        clear_table_cache(spark)
+        state.clear(spark)
     assert base == relaid, f"{name}: result depends on physical partitioning"
 
 
