@@ -22,8 +22,6 @@ same rows as the naive one:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -221,9 +219,9 @@ def ensure_bucketed_tables(
     """Lay out orders and lineitem bucketed by the join key (one-time
     shuffle at write; every subsequent equi-join on o_orderkey/l_orderkey
     is exchange-free). Returns the two table names."""
-    from ..sources.catalog import reset_managed_table
+    from ..sources.catalog import dir_tag, reset_managed_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    tag = dir_tag(sf_dir)
     ot, lt = f"orders_b_{tag}", f"lineitem_b_{tag}"
     for name, src, key in ((ot, "orders", "o_orderkey"), (lt, "lineitem", "l_orderkey")):
         if not spark.catalog.tableExists(name):

@@ -11,13 +11,11 @@ incremental MV refresh.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import dir_tag, load_table
 
 _DEC = "decimal(27,6)"
 
@@ -90,8 +88,7 @@ def refresh_mv(
 )
 def c07_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    mv = f"mv_daily_rollup_{tag}"
+    mv = f"mv_daily_rollup_{dir_tag(sf_dir)}"
     refresh_mv(spark, ev, mv, changed_days=None)  # initial full build
     # incremental refresh of two partitions; source unchanged, so the MV
     # must still equal the full-query oracle — proves the overwrite is

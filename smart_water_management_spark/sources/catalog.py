@@ -9,6 +9,9 @@ hit hive-partitioned directories and prune on year/month/day.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -191,6 +194,14 @@ def fan_out(df: DataFrame, spark: SparkSession, min_factor: int = 2) -> DataFram
     return df
 
 
+def dir_tag(sf_dir: str) -> str:
+    """Name fragment for tables and scratch paths derived from a data dir:
+    a short hex hash of its realpath. Two dirs with the same base name
+    never share a derived object, and any dir name yields a valid
+    identifier."""
+    return hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
+
+
 def warehouse_path(spark: SparkSession) -> str:
     """Local filesystem path of the session warehouse dir (managed tables).
 
@@ -211,7 +222,6 @@ def reset_managed_table(spark: SparkSession, name: str) -> None:
     with LOCATION_ALREADY_EXISTS — so the directory is removed even when
     the catalog has never heard of the table.
     """
-    import os
     import shutil
 
     spark.sql(f"DROP TABLE IF EXISTS {name}")

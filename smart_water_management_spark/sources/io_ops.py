@@ -35,7 +35,7 @@ from pyspark.sql.types import (
 
 from ..functions.numeric import dsum, sql_dsum
 from ..registry import register
-from .catalog import load_table, read_csv_with_schema
+from .catalog import dir_tag, load_table, read_csv_with_schema
 
 SCRATCH = os.path.join(os.path.dirname(__file__), "..", "..", "spark-warehouse", "scratch")
 
@@ -52,8 +52,7 @@ ORDERS_SCHEMA = StructType(
 
 
 def _scratch(name: str, sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(SCRATCH, f"{name}-{tag}")
+    return os.path.join(SCRATCH, f"{name}-{dir_tag(sf_dir)}")
 
 
 def _orders_checksum(df: DataFrame) -> DataFrame:

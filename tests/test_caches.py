@@ -6,9 +6,9 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
-from smart_water_management_spark import state
+from smart_water_management_spark import registry, state
 from smart_water_management_spark.plans import dashboard
-from smart_water_management_spark.sources import catalog
+from smart_water_management_spark.sources import catalog, io_ops
 
 from .conftest import SF_DIR
 
@@ -234,3 +234,40 @@ def test_q13_rides_prepared_statement_memo(spark):
     assert a is b
     assert spark.catalog.tableExists("v_district_performance")
     assert a.count() > 0
+
+
+def test_dir_derived_names_follow_the_dir(spark, tmp_path):
+    """Tables and scratch paths built from a data dir (k02's bucketed
+    tables, c07's MV, the io_ops sinks) are named by a hash of the dir's
+    realpath: a ``-`` in the dir name is a valid identifier, and two dirs
+    with the same base name each get their own answer, not whichever
+    dir ran first."""
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from .conftest import assert_oracle_match
+
+    dirs = [tmp_path / "a" / "sf-0.001", tmp_path / "b" / "sf-0.001"]
+    for d in dirs:
+        d.mkdir(parents=True)
+        for t in catalog.TABLES:
+            shutil.copyfile(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
+    for t in ("orders", "lineitem"):
+        tbl = pq.read_table(f"{SF_DIR}/{t}.parquet")
+        pq.write_table(tbl.slice(0, tbl.num_rows // 2), dirs[1] / f"{t}.parquet")
+    try:
+        for d in dirs:
+            with duckdb.connect() as con:
+                for t in catalog.TABLES:
+                    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+                for name in ("k02_bucketed_join", "c07_mv_refresh",
+                             "s05_partitioned_sink_prune"):
+                    spec = registry._REGISTRY[name]
+                    assert_oracle_match(spec.fn(spark, str(d)), con, spec.oracle,
+                                        name=f"{name} over {d.parent.name}")
+    finally:
+        # scratch paths live in the checkout, not under tmp_path
+        for d in dirs:
+            shutil.rmtree(io_ops._scratch("s05_part", str(d)), ignore_errors=True)

@@ -151,49 +151,6 @@ def test_driver_window_aliases_are_exact():
         assert spec.oracle == target.oracle, name
 
 
-def test_round12_rotation_candidates_are_registered_and_oracle_backed():
-    """Typo-proof the NEXT rotation: every documented round-12 candidate
-    must exist in the registry today, and all except p90-style rows-only
-    names must carry an oracle (a no-oracle name in the window wastes a
-    CORRECTNESS slot — the round-4 p90 lesson)."""
-    from smart_water_management_spark.driver_window import ROUND12_CANDIDATES
-
-    for name in ROUND12_CANDIDATES:
-        assert name in _REGISTRY, f"round-12 candidate not registered: {name}"
-        assert _REGISTRY[name].oracle is not None, (
-            f"round-12 candidate has no oracle (would waste a window slot): {name}"
-        )
-
-
-def test_attestation_tail_fully_queued():
-    """VERDICT r10 directive #1: window ∪ queue ∪ driver ledger must cover
-    EVERY oracle-backed natural name — a name outside all three can never
-    be driver-attested. The ledger side is read from DRIVER_LEDGER.md
-    (regenerated by tools/driver_ledger.py from CORRECTNESS_r*.json)."""
-    import os
-    import re
-
-    from smart_water_management_spark.driver_window import (
-        DRIVER_WINDOW,
-        ROUND12_CANDIDATES,
-    )
-
-    ledger_path = os.path.join(os.path.dirname(__file__), "..", "DRIVER_LEDGER.md")
-    txt = open(ledger_path).read()
-    green = set()
-    for m in re.finditer(r"\| r\d+ \(\d+ new\) \| (.+?) \|", txt):
-        green |= set(m.group(1).split())
-    oracle_backed = {
-        n for n, s in _REGISTRY.items()
-        if s.alias_of is None and s.oracle is not None
-    }
-    uncovered = oracle_backed - green - set(DRIVER_WINDOW) - set(ROUND12_CANDIDATES)
-    assert not uncovered, (
-        f"{len(uncovered)} oracle-backed names outside window+queue+ledger: "
-        f"{sorted(uncovered)[:10]}..."
-    )
-
-
 @pytest.mark.parametrize("name", PARITY_PARAMS)
 def test_query_vs_oracle(spark, duck, name):
     spec = _REGISTRY[name]
@@ -265,31 +222,3 @@ def test_readme_family_counts_match_registry():
     # every registry family appears in some row
     covered = {k for keys in seen for k in keys}
     assert set(fam) <= covered, f"families missing from README: {set(fam) - covered}"
-
-
-def test_round_close_tooling_consistent():
-    """VERDICT r10 directive #7 CI pin: the one-command closing path
-    (tools/round_close.py) must find ledger, queue, and README in a
-    mutually consistent state — ledger regenerates byte-identically
-    from CORRECTNESS_r*.json, the attestation ETA has no uncovered
-    names, and the dynamic next-queue discovery resolves (the old
-    hardcoded ROUND11 import broke on rotation)."""
-    import os
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
-    try:
-        import closing_record
-        import driver_ledger
-
-        qname, queue = closing_record.next_queue()
-        assert qname.startswith("ROUND") and len(queue) > 0
-        eta = closing_record.attestation_eta()
-        assert not eta["uncovered"], eta["uncovered"]
-        assert eta["rotations_to_close"] >= 0
-        want = driver_ledger.render(root)
-        have = open(os.path.join(root, "DRIVER_LEDGER.md")).read()
-        assert want == have, "DRIVER_LEDGER.md stale — run tools/round_close.py"
-    finally:
-        sys.path.remove(os.path.join(root, "tools"))

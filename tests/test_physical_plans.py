@@ -11,27 +11,72 @@ local benchmark.
 
 from __future__ import annotations
 
+import collections
+import contextlib
+import dataclasses
+import json
+import os
+import re
+
 import pytest
 
-from smart_water_management_spark import registry
+from smart_water_management_spark import registry, state
 from smart_water_management_spark.registry import _REGISTRY
 
 from .conftest import SF_DIR
 
+FINGERPRINTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "plans", "fingerprints.json",
+)
+SF_NAME = os.path.basename(os.path.normpath(SF_DIR))
+
+# Plan node kinds a fingerprint counts: the shuffles, sorts, joins,
+# windows, Python-worker boundaries and cached scans that decide a
+# query's cost at scale.
+FINGERPRINT_KINDS = (
+    "Exchange", "BroadcastExchange", "Sort",
+    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+    "Window",
+    "BatchEvalPython", "ArrowEvalPython", "BatchEvalPythonUDTF",
+    "ArrowEvalPythonUDTF", "MapInPandas", "MapInArrow",
+    "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow",
+    "ArrowAggregatePython", "ArrowWindowPython",
+    "FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark",
+    "InMemoryTableScan",
+)
+
+# a plan line's node name, after the tree prefix ("+- ", ":  :- ") and
+# any whole-stage-codegen marker ("*(3) ")
+_NODE = re.compile(r"^(?:[ :|]*[+:]- )?(?:\*\(\d+\) )?(\w+)", re.M)
+
+
+@contextlib.contextmanager
+def production_pass(spark):
+    """Plan under the at-scale posture: the small-input tuning (shuffle=8,
+    codegen off, cached scans) must not apply, and nothing an earlier
+    query memoized or pinned may leak into the plans."""
+    registry.set_posture("production")
+    state.clear(spark)
+    # frames a query persisted outside the store survive state.clear, and
+    # once materialized their measured size changes later plans (joins
+    # flip to broadcast), so the pass also starts from an empty cache
+    spark.catalog.clearCache()
+    spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        yield
+    finally:
+        registry.set_posture("auto")
+
 
 @pytest.fixture(autouse=True)
 def production_posture(spark):
-    """Plan assertions check the at-scale physical plans, so the
-    small-input tuning (shuffle=8, codegen off, cached scans) must not
-    apply here; restore the session's compiled-execution posture."""
-    from smart_water_management_spark import state
-
-    registry.set_posture("production")
-    state.clear(spark)
-    spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    yield
-    registry.set_posture("auto")
+    """Plan assertions check the at-scale physical plans."""
+    with production_pass(spark):
+        yield
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -39,6 +84,55 @@ def plan_of(df, mode: str = "formatted") -> str:
     return sc._jvm.PythonSQLUtils.explainString(  # type: ignore[union-attr]
         df._jdf.queryExecution(), mode
     )
+
+
+def fingerprint(plan: str) -> dict[str, int]:
+    """Per-kind node counts of a ``simple`` plan string (zeros omitted)."""
+    seen = collections.Counter(m.group(1) for m in _NODE.finditer(plan))
+    return {k: seen[k] for k in FINGERPRINT_KINDS if seen[k]}
+
+
+def fingerprint_diff(recorded: dict, live: dict) -> list[str]:
+    """One line per changed query and node kind, e.g.
+    ``a01_multi_agg_pricing: Exchange 1 -> 2 (+1)``."""
+    out = []
+    for name in sorted(set(recorded) | set(live)):
+        if name not in live:
+            out.append(f"{name}: recorded but not planned")
+            continue
+        if name not in recorded:
+            out.append(f"{name}: planned but not recorded")
+            continue
+        was, now = recorded[name], live[name]
+        for kind in FINGERPRINT_KINDS:
+            a, b = was.get(kind, 0), now.get(kind, 0)
+            if a != b:
+                out.append(f"{name}: {kind} {a} -> {b} ({b - a:+d})")
+    return out
+
+
+def natural_names() -> list[str]:
+    return sorted(n for n, s in _REGISTRY.items() if s.alias_of is None)
+
+
+def live_fingerprints(spark, names) -> dict[str, dict[str, int]]:
+    """Fingerprint each name's plan in one production pass, in order."""
+    with production_pass(spark):
+        return {
+            n: fingerprint(plan_of(_REGISTRY[n].fn(spark, SF_DIR), "simple"))
+            for n in names
+        }
+
+
+def recorded_fingerprints() -> dict:
+    """The committed fingerprint file's queries; skips the calling test
+    when the suite runs at another SF, because broadcast choices (and so
+    the exchange counts) legitimately depend on table size."""
+    with open(FINGERPRINTS) as f:
+        data = json.load(f)
+    if data["sf"] != SF_NAME:
+        pytest.skip(f"fingerprints recorded at {data['sf']}, suite runs at {SF_NAME}")
+    return data["queries"]
 
 
 def _q(spark, name):
@@ -120,36 +214,27 @@ def test_partition_pruning_on_partitioned_sink(spark):
 def registry_audit(spark):
     """ONE construction + plan pass over every natural registry name,
     shared by the four registry-wide audits (cartesian, unbounded global
-    window, low-NDV window, unbounded nested-loop). r12: the four tests
-    each rebuilt all ~520 query plans independently — 696 s of the
-    default pytest gate for identical construction work; one shared
-    sweep keeps the exact same no-skip-list coverage (every natural
-    name, errors reported not swallowed) at a quarter of the cost. The
-    walkers run on every name; per-test exception lists are applied at
-    ASSERT time so the allowlists stay local to their audits."""
-    from smart_water_management_spark import registry as _registry
-    from smart_water_management_spark import state
-
-    _registry.set_posture("production")
-    state.clear(spark)
-    spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    window, low-NDV window, unbounded nested-loop) and the plan
+    fingerprint diff: every natural name, errors reported not swallowed.
+    The walkers run on every name; per-test exception lists are applied
+    at ASSERT time so the allowlists stay local to their audits. The
+    pass is the one ``live_fingerprints`` makes: ``production_pass``,
+    then every natural name in sorted order."""
     out = {
-        "errors": [], "cartesian": [],
+        "errors": [], "cartesian": [], "fingerprints": {},
         "low_ndv": {}, "global_win": {}, "bnlj": {},
     }
-    try:
-        for name, spec in sorted(_REGISTRY.items()):
-            if spec.alias_of is not None:
-                continue
+    with production_pass(spark):
+        for name in natural_names():
             try:
-                df = spec.fn(spark, SF_DIR)
+                df = _REGISTRY[name].fn(spark, SF_DIR)
                 plan = plan_of(df, "simple")
             except Exception as exc:  # noqa: BLE001 — reported, not swallowed
                 out["errors"].append(f"{name}: {type(exc).__name__}: {exc}")
                 continue
             if "CartesianProduct" in plan:
                 out["cartesian"].append(name)
+            out["fingerprints"][name] = fingerprint(plan)
             bad = low_ndv_partitioned_windows(df)
             if bad:
                 out["low_ndv"][name] = bad
@@ -159,8 +244,6 @@ def registry_audit(spark):
             bad = unbounded_nested_loop_joins(df)
             if bad:
                 out["bnlj"][name] = bad
-    finally:
-        _registry.set_posture("auto")
     return out
 
 
@@ -178,6 +261,30 @@ def test_no_cartesian_products_anywhere(registry_audit):
     assert not registry_audit["cartesian"], (
         f"cartesian products in: {registry_audit['cartesian']}"
     )
+
+
+def test_plan_fingerprints_match_recorded(registry_audit):
+    """Every natural query's plan-shape counts equal the committed
+    plans/fingerprints.json, so a plan change surfaces as one line per
+    changed query and node kind. Accept an intended change by
+    regenerating the file (``python tools/plans.py``)."""
+    diff = fingerprint_diff(recorded_fingerprints(), registry_audit["fingerprints"])
+    assert not diff, "plan fingerprints changed:\n" + "\n".join(diff)
+
+
+def test_fingerprint_diff_names_an_added_exchange(spark, monkeypatch):
+    """The diff is not blind: one extra ``.repartition(3)`` on one query
+    must show up as exactly that query gaining one Exchange."""
+    name = "a01_multi_agg_pricing"
+    recorded = recorded_fingerprints()[name]
+    spec = _REGISTRY[name]
+    monkeypatch.setitem(_REGISTRY, name, dataclasses.replace(
+        spec, fn=lambda s, d: spec.fn(s, d).repartition(3)))
+    live = live_fingerprints(spark, [name])
+    n = recorded.get("Exchange", 0)
+    assert fingerprint_diff({name: recorded}, live) == [
+        f"{name}: Exchange {n} -> {n + 1} (+1)"
+    ]
 
 
 def test_window_single_shuffle(spark):
