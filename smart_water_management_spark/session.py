@@ -31,6 +31,24 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamps for oracle comparison (reference :50 uses UTC).
     "spark.sql.session.timeZone": "UTC",
+    # Compiled-class cache (an LRU keyed on the generated source). Spark's
+    # default of 100 is below one pass of the engine's repeated jobs: the
+    # perfbench `batch` ops generate 133-147 classes per pass and
+    # `dashboard` 118, so most were evicted before their reuse and each
+    # warm `batch` pass recompiled 119-144 of them (and the JIT then
+    # compiled the fresh classes again). First calls of the whole registry
+    # compile 6,399 classes at sf0.1; holding 6,803 raised metaspace from
+    # 262 to 315 MB, so 1024 entries cost about 8 MB. Static conf, read
+    # once per JVM: it applies only to sessions get_session creates, not
+    # to one built elsewhere first.
+    "spark.sql.codegen.cache.maxEntries": "1024",
+    # The cache matches source text, and a whole-stage class is named
+    # after its codegen stage id, which under AQE depends on the order the
+    # query's stages were planned. With the id in the name, 57 queries at
+    # sf0.1 compiled again on their second call (531 classes; 21 and 60
+    # without it), and v19_rule_cooccurrence compiled 115 classes for 12
+    # distinct stage bodies. Plans and `explain` keep the ids.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

@@ -47,28 +47,26 @@ def _raw_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1: file-source stream over the events table (replay semantics).
+def _stage_table_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Symlink-stage a table's parquet (file or multi-file directory) as
+    the directory a file-source stream reads.
 
-    ``maxFilesPerTrigger`` is the micro-batch pacing knob (the analog of the
-    reference's refresh_minutes polling cadence).
+    The stage lives under the session warehouse (per process for
+    ``get_session`` sessions) and is named by ``dir_tag``, so no other
+    process relinks it mid-replay and two dirs with the same path string
+    or base name never share one. Every call empties and relinks it: the
+    dir's files may have changed since the last call.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # File stream sources need a *directory*; stage the single parquet file
-    # behind a symlink dir (in production this is the landing directory /
-    # Kafka topic, so no staging exists).
-    import hashlib
     import os
 
+    from ..sources.catalog import dir_tag, warehouse_path
+
     stage = os.path.join(
-        tempfile.gettempdir(),
-        f"swm_events_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
+        warehouse_path(spark), f"_stream_stage_{table}_{dir_tag(sf_dir)}"
     )
     os.makedirs(stage, exist_ok=True)
-    target = f"{sf_dir}/events.parquet"
-    # unconditional relink: lexists (not exists) also catches a dangling
-    # link whose target vanished, which exists() would miss and symlink()
-    # would then trip over with FileExistsError
+    target = f"{sf_dir}/{table}.parquet"
+    # unconditional relink: a stale link may point at a vanished target
     for old in os.listdir(stage):
         os.unlink(os.path.join(stage, old))
     if os.path.isdir(target):
@@ -80,10 +78,25 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             os.symlink(
                 os.path.join(target, part),
-                os.path.join(stage, f"events_{i:05d}.parquet"),
+                os.path.join(stage, f"{table}_{i:05d}.parquet"),
             )
     else:
-        os.symlink(target, os.path.join(stage, "events.parquet"))
+        os.symlink(target, os.path.join(stage, f"{table}.parquet"))
+    return stage
+
+
+def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T1: file-source stream over the events table (replay semantics).
+
+    ``maxFilesPerTrigger`` is the micro-batch pacing knob (the analog of the
+    reference's refresh_minutes polling cadence).
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # File stream sources need a *directory*; stage the single parquet file
+    # behind a symlink dir (in production this is the landing directory /
+    # Kafka topic, so no staging exists).
+    stage = _stage_table_dir(spark, sf_dir, "events")
+    target = f"{sf_dir}/events.parquet"
     from ..sources.catalog import normalize_event_ts
 
     # Footer-only batch read to learn the physical ts type (bigint = NANOS
@@ -148,7 +161,12 @@ def run_to_completion(
             .start()
         )
         q.awaitTermination()
-    return spark.table(name)
+    # The resolved frame holds the memory sink itself, so the uniquely
+    # named temp view can go: left registered, every replay would keep
+    # its full result alive for the rest of the session.
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def hourly_preaggregate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,34 +857,6 @@ def t14_streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- t15: streaming MinHash+LSH dedup-on-arrival -----------------------------
 
 
-def _stage_table_dir(sf_dir: str, table: str) -> str:
-    """Symlink-stage any table's parquet (file or multi-file directory)
-    for a file-source stream — the generalization of read_event_stream's
-    staging used by the documents stream."""
-    import hashlib
-    import os
-
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"swm_{table}_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    os.makedirs(stage, exist_ok=True)
-    target = f"{sf_dir}/{table}.parquet"
-    for old in os.listdir(stage):
-        os.unlink(os.path.join(stage, old))
-    if os.path.isdir(target):
-        for i, part in enumerate(
-            sorted(f for f in os.listdir(target) if f.endswith(".parquet"))
-        ):
-            os.symlink(
-                os.path.join(target, part),
-                os.path.join(stage, f"{table}_{i:05d}.parquet"),
-            )
-    else:
-        os.symlink(target, os.path.join(stage, f"{table}.parquet"))
-    return stage
-
-
 def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T15: near-dup detection ON ARRIVAL — the streaming twin of x08.
 
@@ -927,7 +917,7 @@ def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged_docs.write.mode("append").insertInto("lsh_docs_state")
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _stage_table_dir(sf_dir, "documents")
+    stage = _stage_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
@@ -1320,7 +1310,7 @@ def countmin_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged.write.mode("overwrite").insertInto("cms_grid_state")
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _stage_table_dir(sf_dir, "documents")
+    stage = _stage_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, "
@@ -1434,7 +1424,7 @@ def ri_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").insertInto("ri_monitor_state")
 
-    stage = _stage_table_dir(sf_dir, "lineitem")
+    stage = _stage_table_dir(spark, sf_dir, "lineitem")
     stream = (
         spark.readStream.schema("l_orderkey long")  # schema projection:
         # the monitor needs only the FK column, parquet prunes the rest
@@ -1982,7 +1972,7 @@ def psi_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").insertInto("psi_monitor_state")
 
-    stage = _stage_table_dir(sf_dir, "documents")
+    stage = _stage_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema("source string, text string")
         .option("maxFilesPerTrigger", 1)
@@ -2379,7 +2369,7 @@ def mmd_moment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").insertInto("mmd_moment_state")
 
-    stage = _stage_table_dir(sf_dir, "embeddings")
+    stage = _stage_table_dir(spark, sf_dir, "embeddings")
     stream = (
         spark.readStream.schema(
             "vec_id long, embedding array<float>, label int"
@@ -2648,7 +2638,7 @@ def winnow_state_stream(
         pos.write.mode("append").insertInto("winnow_doc_state")
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _stage_table_dir(sf_dir, "documents")
+    stage = _stage_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(
             "doc_id long, source string, text string, n_chars long"
@@ -2763,7 +2753,7 @@ def quantity_grid_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").insertInto("quantity_grid_state")
 
-    stage = _stage_table_dir(sf_dir, "lineitem")
+    stage = _stage_table_dir(spark, sf_dir, "lineitem")
     stream = (
         spark.readStream.schema("l_quantity double, l_linestatus string")
         .option("maxFilesPerTrigger", 1)
@@ -3031,7 +3021,7 @@ def year_quantity_grid_stream(
             "year_quantity_grid_state"
         )
 
-    stage = _stage_table_dir(sf_dir, "lineitem")
+    stage = _stage_table_dir(spark, sf_dir, "lineitem")
     stream = (
         spark.readStream.schema("l_quantity double, l_shipdate timestamp")
         .option("maxFilesPerTrigger", 1)

@@ -10,7 +10,7 @@ from smart_water_management_spark import registry, state
 from smart_water_management_spark.plans import dashboard
 from smart_water_management_spark.sources import catalog, io_ops
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, assert_oracle_match
 
 
 def test_clear_evicts_memo_and_pins(spark):
@@ -238,23 +238,21 @@ def test_q13_rides_prepared_statement_memo(spark):
 
 def test_dir_derived_names_follow_the_dir(spark, tmp_path):
     """Tables and scratch paths built from a data dir (k02's bucketed
-    tables, c07's MV, the io_ops sinks) are named by a hash of the dir's
-    realpath: a ``-`` in the dir name is a valid identifier, and two dirs
-    with the same base name each get their own answer, not whichever
-    dir ran first."""
+    tables, c07's MV, the io_ops sinks, the streams' symlink stages) are
+    named by a hash of the dir's realpath: a ``-`` in the dir name is a
+    valid identifier, and two dirs with the same base name each get
+    their own answer, not whichever dir ran first."""
     import shutil
 
     import duckdb
     import pyarrow.parquet as pq
-
-    from .conftest import assert_oracle_match
 
     dirs = [tmp_path / "a" / "sf-0.001", tmp_path / "b" / "sf-0.001"]
     for d in dirs:
         d.mkdir(parents=True)
         for t in catalog.TABLES:
             shutil.copyfile(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
-    for t in ("orders", "lineitem"):
+    for t in ("orders", "lineitem", "events"):
         tbl = pq.read_table(f"{SF_DIR}/{t}.parquet")
         pq.write_table(tbl.slice(0, tbl.num_rows // 2), dirs[1] / f"{t}.parquet")
     try:
@@ -263,7 +261,8 @@ def test_dir_derived_names_follow_the_dir(spark, tmp_path):
                 for t in catalog.TABLES:
                     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
                 for name in ("k02_bucketed_join", "c07_mv_refresh",
-                             "s05_partitioned_sink_prune"):
+                             "s05_partitioned_sink_prune",
+                             "t05_streaming_hourly"):
                     spec = registry._REGISTRY[name]
                     assert_oracle_match(spec.fn(spark, str(d)), con, spec.oracle,
                                         name=f"{name} over {d.parent.name}")
@@ -271,3 +270,74 @@ def test_dir_derived_names_follow_the_dir(spark, tmp_path):
         # scratch paths live in the checkout, not under tmp_path
         for d in dirs:
             shutil.rmtree(io_ops._scratch("s05_part", str(d)), ignore_errors=True)
+
+
+def test_streaming_replay_drops_its_view(spark, duck):
+    """Each bounded replay drains into a uniquely named memory-sink view;
+    the returned frame holds the sink itself, so the view is dropped at
+    once instead of keeping every replay's result alive for the session."""
+    spec = registry._REGISTRY["t05_streaming_hourly"]
+    for _ in range(3):
+        out = spec.fn(spark, SF_DIR)
+    views = [t.name for t in spark.catalog.listTables()
+             if t.name.startswith("hourly_preagg_")]
+    assert views == []
+    assert_oracle_match(out, duck, spec.oracle, name="t05 after its view drop")
+
+
+def _compiles(spark) -> int:
+    """Classes Spark's codegen has compiled so far in this JVM."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+# The eight perfbench `batch` ops: 147 distinct generated classes at
+# sf0.001, more than Spark's default codegen cache of 100 holds.
+_BATCH_OPS = (
+    "j09_asof_join", "v01_fused_validation", "t05_streaming_hourly",
+    "f10_pandas_udf_severity", "x90_curation_funnel",
+    "s05_partitioned_sink_prune", "c04_scd2_merge", "c07_mv_refresh",
+)
+
+
+def test_codegen_cache_holds_a_repeated_pass(spark):
+    """A session that reruns the same jobs compiles each generated class
+    once: the codegen cache is sized by ENGINE_CONF above a pass of the
+    batch ops, so their second run compiles nothing. At Spark's default
+    size every class is evicted before its reuse and the second run
+    recompiles about as many as the first."""
+    from smart_water_management_spark.session import ENGINE_CONF
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == ENGINE_CONF[key]
+    registry.set_posture("production")
+    try:
+        counts = []
+        for _ in range(2):
+            before = _compiles(spark)
+            for name in _BATCH_OPS:
+                registry._REGISTRY[name].fn(spark, SF_DIR) \
+                    .write.format("noop").mode("overwrite").save()
+            counts.append(_compiles(spark) - before)
+    finally:
+        registry.set_posture("auto")
+    assert counts[1] == 0, f"compiles per run: {counts}"
+
+
+def test_equal_stage_bodies_share_a_class(spark):
+    """v19 unions one aggregate per pair of rules, and every branch plans
+    the same stage body under its own codegen stage id. With the id kept
+    out of generated class names (ENGINE_CONF) the branches share their
+    classes: 12 compiles at sf0.001, where numbered names compiled 116."""
+    from smart_water_management_spark.validation.checks import EVENTS_RULES
+
+    n_pairs = len(EVENTS_RULES) * (len(EVENTS_RULES) - 1) // 2
+    registry.set_posture("production")
+    try:
+        before = _compiles(spark)
+        registry._REGISTRY["v19_rule_cooccurrence"].fn(spark, SF_DIR) \
+            .write.format("noop").mode("overwrite").save()
+        compiled = _compiles(spark) - before
+    finally:
+        registry.set_posture("auto")
+    assert compiled < n_pairs, f"{compiled} classes for {n_pairs} equal branches"

@@ -6,6 +6,11 @@ the noop sink (computes every column, no sink cost), one warm-up-free
 pass by default (``--passes 2`` for min-of-2), and writes a sorted JSON
 report to the given output path.
 
+It also counts each query's codegen compiles (Spark's CodegenMetrics) in
+its first and its last pass. Under ``--passes 2`` a query whose last pass
+still compiled generates different code per call, so the session's
+compiled-class cache cannot serve its repeats.
+
 This finds the slow tail the headline bench cannot see: a full registry
 replay runs all ~520 declared queries, so a handful of 2-second
 stragglers cost more wall clock than any headline query.
@@ -44,20 +49,28 @@ def main() -> None:
         n for n, s in sorted(_REGISTRY.items())
         if s.alias_of is None and (only is None or n in only)
     ]
+    compile_count = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount
+    )
     out: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {}  # name -> [first pass, last pass]
     errs: dict[str, str] = {}
     t_start = time.monotonic()
     for i, n in enumerate(names):
         spec = _REGISTRY[n]
         spark.sparkContext.setJobDescription(f"sweep:{n}")
         best = float("inf")
+        counts = []
         try:
             for _ in range(args.passes):
-                t0 = time.monotonic()
+                c0, t0 = compile_count(), time.monotonic()
                 df = spec.fn(spark, args.sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 best = min(best, time.monotonic() - t0)
+                counts.append(compile_count() - c0)
             out[n] = round(best, 3)
+            compiles[n] = [counts[0], counts[-1]]
         except Exception as exc:  # noqa: BLE001 - report, keep sweeping
             errs[n] = f"{type(exc).__name__}: {exc}"[:200]
         if (i + 1) % 50 == 0:
@@ -74,12 +87,19 @@ def main() -> None:
         "total_wall": round(time.monotonic() - t_start, 1),
         "n_queries": len(out),
         "errors": errs,
+        "compiles_first_pass": sum(c[0] for c in compiles.values()),
+        "compiles_last_pass": sum(c[1] for c in compiles.values()),
+        "last_pass_compiled": sorted(n for n, c in compiles.items() if c[1]),
+        "compiles": compiles,
         "slowest": dict(sorted(out.items(), key=lambda kv: -kv[1])[:40]),
         "times": out,
     }
     with open(args.out, "w") as f:
         json.dump(report, f, indent=1)
     print(f"wrote {args.out}; total {report['total_wall']}s over {len(out)} queries")
+    print(f"compiles: first pass {report['compiles_first_pass']}, "
+          f"last pass {report['compiles_last_pass']}; "
+          f"last pass compiled: {report['last_pass_compiled']}")
     for k, v in list(report["slowest"].items())[:25]:
         print(f"  {k:40s} {v}")
     if errs:
