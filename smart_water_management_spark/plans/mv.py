@@ -60,6 +60,7 @@ def refresh_mv(
         # replaced. Column order must match the table (data cols, then day).
         # The conf is session-global, so restore it — leaving it 'dynamic'
         # would silently change every later static partitioned overwrite.
+        # insertInto ignores the writer's partitionOverwriteMode option.
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:

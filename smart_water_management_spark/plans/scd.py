@@ -510,14 +510,12 @@ def c13_partition_delta_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(extra.select(
         "o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus"
     ))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        backfill.write.mode("overwrite").partitionBy("o_orderstatus").parquet(
-            path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        backfill.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("o_orderstatus")
+        .parquet(path)
+    )
     after = profile(spark.read.parquet(path))
     a, b = after.alias("a"), before.alias("b")
     return b.join(a, "part").select(

@@ -17,14 +17,10 @@ cast to double). Both engines then produce bit-identical doubles.
 
 from __future__ import annotations
 
-import functools
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-
-from . import state
 
 
 @dataclass(frozen=True)
@@ -38,102 +34,6 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# Execution-posture tuning. A shuffle partition (and, for streaming, a
-# state store instance) costs a task launch + state setup regardless of
-# how little data lands in it; every distinct query pays a
-# whole-stage-codegen JIT compile before its first row; and re-decoding
-# the same parquet per query is repeat cost. On MB-scale inputs (the
-# correctness-sweep regime) all three are pure overhead — measured at
-# sf0.01: a stateful stream-stream join drops 7.7s -> 2.5s going 32 -> 8
-# partitions, and the 135-query sweep drops ~20% with interpreted
-# execution + shared persisted scans. The regime flips fast: at sf0.1
-# (tens of MB, CPU-bound hashing/minhash) compiled 32-way execution
-# already wins, so the threshold is deliberately low and everything
-# above it keeps the session's configured posture untouched.
-# ``set_posture("production")`` (or SWM_POSTURE=production) disables the
-# small-input mode entirely; the physical-plan CI asserts the production
-# plans under that override.
-_SMALL_INPUT_BYTES = 8 * 1024 * 1024
-_SMALL_INPUT_PARTITIONS = 8
-_INPUT_BYTES_CACHE: dict[str, tuple[int, int | None]] = {}
-_POSTURE = os.environ.get("SWM_POSTURE", "auto")
-
-
-def set_posture(posture: str) -> None:
-    """'auto' (default): right-size execution to input scale; 'production':
-    never deviate from the session's configured execution posture."""
-    if posture not in ("auto", "production"):
-        raise ValueError(f"unknown posture: {posture}")
-    global _POSTURE
-    _POSTURE = posture
-
-
-def _input_bytes(sf_dir: str) -> int | None:
-    """Total on-disk bytes under ``sf_dir``; None when not a local path."""
-    if "://" in sf_dir and not sf_dir.startswith("file:"):
-        return None
-    path = sf_dir.removeprefix("file://").removeprefix("file:")
-    if not os.path.isdir(path):
-        return None
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
-def small_input(sf_dir: str) -> bool:
-    """True when ``sf_dir`` is a local dataset small enough that per-task
-    and per-query fixed costs dominate actual data movement."""
-    if _POSTURE == "production":
-        return False
-    # Cache is validated against the directory mtime: a dataset that gains
-    # files mid-session invalidates its cached size instead of keeping the
-    # small-input posture forever (file growth without new files reuses the
-    # cache — appended datasets land as new part files in practice).
-    path = sf_dir.removeprefix("file://").removeprefix("file:")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = 0
-    cached = _INPUT_BYTES_CACHE.get(sf_dir)
-    if cached is None or cached[0] != mtime:
-        cached = (mtime, _input_bytes(sf_dir))
-        _INPUT_BYTES_CACHE[sf_dir] = cached
-    nbytes = cached[1]
-    return nbytes is not None and nbytes < _SMALL_INPUT_BYTES
-
-
-# The session's own posture, captured in its store before the first
-# small-input override so a later large-input query RESTORES it — without
-# this the small-input settings would stick for the rest of the session and
-# silently degrade every subsequent at-scale query.
-_TUNED_CONFS = (
-    "spark.sql.shuffle.partitions",
-    "spark.sql.codegen.wholeStage",
-    "spark.sql.adaptive.enabled",
-)
-
-
-def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
-    """Right-size shuffle width and codegen mode to the input scale."""
-    st = state.store(spark)
-    if not small_input(sf_dir):
-        saved, st.saved_conf = st.saved_conf or {}, None
-        for key, val in saved.items():
-            spark.conf.set(key, val)
-        return
-    if st.saved_conf is None:
-        st.saved_conf = {k: spark.conf.get(k) for k in _TUNED_CONFS}
-    spark.conf.set("spark.sql.shuffle.partitions", str(_SMALL_INPUT_PARTITIONS))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # JIT-compiling each one-shot plan costs more than interpreting it
-    # over a few MB of input; beyond that, compiled execution wins
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-
 
 def register(name: str, oracle: str | None = None, doc: str = ""):
     """Decorator: register a query callable under ``name``."""
@@ -141,13 +41,7 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-
-        @functools.wraps(fn)
-        def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-            tune_for_input(spark, sf_dir)
-            return fn(spark, sf_dir)
-
-        _REGISTRY[name] = QuerySpec(name=name, fn=tuned, oracle=oracle, doc=doc)
+        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc)
         return fn
 
     return deco

@@ -14,7 +14,10 @@ partition num.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
@@ -63,9 +66,9 @@ def get_session(app_name: str = "smart-water-management-spark") -> SparkSession:
     # Per-process warehouse: managed scratch tables (streaming state,
     # bucketed join layouts, CBO stats tables) live under a pid-unique
     # dir, so a concurrent replay/pytest/bench process can never clobber
-    # another's state mid-query. Only applies at session creation;
-    # externally created sessions (the verification driver's) keep their
-    # own warehouse untouched.
+    # another's state mid-query, and the dir is removed when the process
+    # exits. Only applies at session creation; a session created
+    # elsewhere first keeps its own warehouse untouched.
     warehouse = os.path.join(tempfile.gettempdir(), f"swm-warehouse-{os.getpid()}")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -79,4 +82,13 @@ def get_session(app_name: str = "smart-water-management-spark") -> SparkSession:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    from .sources.catalog import warehouse_path
+
+    if warehouse_path(spark) == warehouse:
+        _remove_at_exit(warehouse)
     return spark
+
+
+@functools.cache
+def _remove_at_exit(path: str) -> None:
+    atexit.register(shutil.rmtree, path, ignore_errors=True)

@@ -71,18 +71,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     precision above 2^53) back to a microsecond timestamp. The testdata's
     ts values all sit on the microsecond grid, so this is lossless.
     """
-    from ..registry import small_input
-
-    # Small-input posture: the whole dataset fits in a fraction of executor
-    # memory and a sweep re-reads the same ten tables hundreds of times, so
-    # the scan is pinned. Otherwise only the analyzed scan is memoized: it
-    # reuses the resolved file index and footer schema (~80 ms of driver
-    # file listing per table per call) while data still streams through
-    # the scan. At 100 TB base tables are never pinned.
-    key = ("scan", sf_dir, name)
-    if small_input(sf_dir):
-        return state.pin(spark, key, lambda: _read_table(spark, sf_dir, name))
-    return state.memo(spark, key, lambda: _read_table(spark, sf_dir, name))
+    # The analyzed scan is memoized, not persisted: it reuses the resolved
+    # file index and footer schema (~80 ms of driver file listing per table
+    # per call) while data still streams through the scan.
+    return state.memo(
+        spark, ("scan", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
 
 
 def pin_derived(
@@ -170,25 +164,13 @@ def fan_out(df: DataFrame, spark: SparkSession, min_factor: int = 2) -> DataFram
     on a single core. At 100 TB inputs already carry thousands of splits
     and this is a no-op (the partition count check keeps it shuffle-free).
 
-    r12 (VERDICT r11 item 4): the no-op decision at scale is made from
-    ``df.inputFiles()`` — the already-resolved file index — WITHOUT
-    touching ``df.rdd``, which instantiates the full plan-to-RDD
-    conversion on the driver per invocation (fan_out has ~60 call sites,
-    each constructed per query). The file count is a lower bound on the
-    scan's split count, so ``len(files) * min_factor > target`` implies
-    the old partition-count guard would also have no-opped. Only when a
-    repartition is still plausible (few files: the local posture, or a
-    bounded derived frame) is the exact partition count consulted, which
-    keeps every decision identical to the old guard on frames that are
-    already fanned out (e.g. a helper applied to a pre-fanned input).
+    The decision reads the frame's exact partition count: the input file
+    count is no bound on it, since Spark bin-packs small files into one
+    split and splits large ones. ``DataFrame.rdd`` is cached on the frame,
+    and ``load_table`` returns one memoized frame per (session, table), so
+    the plan-to-RDD conversion runs once per table per session.
     """
     target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if len(files) * min_factor > target:
-        return df  # already many splits — scale posture, no RDD conversion
     if df.rdd.getNumPartitions() * min_factor <= target:
         return df.repartition(target)
     return df

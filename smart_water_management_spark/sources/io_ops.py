@@ -289,12 +289,12 @@ def s13_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     corrected = orders.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice", F.col("o_totalprice") * 0.9
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        corrected.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        corrected.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("o_orderstatus")
+        .parquet(path)
+    )
     return _orders_checksum(spark.read.parquet(path))
 
 

@@ -6,11 +6,8 @@ and one eviction path:
 
 - the **memo**: analyzed scans, the dashboard's prepared statements,
   fitted models and footer probes — one LRU of ``MEMO_MAX`` entries;
-- the **pins**: persisted frames (the small-input posture's base scans
-  and derived pins) — one LRU under one byte budget, metered on the
-  cached RDDs the store owns;
-- the confs the small-input posture overrides, saved so a later
-  large-input query can restore them.
+- the **pins**: persisted derived frames — one LRU under one byte
+  budget, metered on the cached RDDs the store owns.
 
 Stores are keyed by ``applicationId`` (unique per SparkContext, unlike a
 reusable ``id()``). A stopped session's whole store is dropped the next
@@ -35,7 +32,6 @@ class _Store:
     pins: "OrderedDict[object, DataFrame]" = field(default_factory=OrderedDict)
     # pin key -> id of its cached RDD, recorded once the pin is materialized
     pin_rdds: dict = field(default_factory=dict)
-    saved_conf: dict[str, str] | None = None
 
 
 _STORES: dict[str, _Store] = {}
@@ -103,8 +99,7 @@ def clear(spark: SparkSession) -> None:
     Needed before plan inspection: Spark's CacheManager substitutes an
     InMemoryRelation into any plan matching a cached fragment, and a
     memoized scan keeps serving a resolved file listing after its
-    directory is rewritten. The saved confs stay: they are the session's
-    own settings, restored by the next large-input query."""
+    directory is rewritten."""
     st = store(spark)
     for df in st.pins.values():
         df.unpersist()

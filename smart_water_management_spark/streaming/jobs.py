@@ -916,7 +916,6 @@ def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged_docs = new_docs.localCheckpoint(eager=True)
         staged_docs.write.mode("append").insertInto("lsh_docs_state")
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stage = _stage_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(
@@ -1309,7 +1308,6 @@ def countmin_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").insertInto("cms_grid_state")
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stage = _stage_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(
@@ -2637,7 +2635,6 @@ def winnow_state_stream(
         pos = winnow_doc_positions(batch_df).localCheckpoint(eager=True)
         pos.write.mode("append").insertInto("winnow_doc_state")
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stage = _stage_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(

@@ -179,14 +179,9 @@ def test_pin_budget_meters_only_owned_pins(spark, monkeypatch):
 def test_plan_cache_is_lru_bounded(spark, monkeypatch):
     """Analyzed scans are memoized per (session, sf_dir, table); many
     tables/dirs in one long-lived driver must not accumulate analyzed
-    plans without limit. Exercises the real load_table population path
-    under the production posture (the branch that memoizes plans instead
-    of persisting)."""
-    from smart_water_management_spark import registry
-
+    plans without limit. Exercises the real load_table population path."""
     state.clear(spark)
     monkeypatch.setattr(state, "MEMO_MAX", 4)
-    registry.set_posture("production")
     try:
         for name in ["region", "nation", "customer", "supplier", "part",
                      "orders", "lineitem"]:
@@ -196,30 +191,17 @@ def test_plan_cache_is_lru_bounded(spark, monkeypatch):
         # LRU: the most recently loaded tables survive.
         assert {k[2] for k in memo} == {"part", "orders", "lineitem", "supplier"}
     finally:
-        registry.set_posture("auto")
         state.clear(spark)
 
 
 def test_fan_out_guard_without_rdd_at_scale(spark):
-    """r12 (VERDICT r11 item 4): fan_out must (a) still fan a one-file
-    local scan to the session's core count, (b) still no-op on an
-    already-fanned frame (the exact-partition fallback), and (c) make
-    the at-scale no-op decision from the resolved file index — a frame
-    with more input files than target/min_factor returns unchanged
-    (identity), which never needs the plan-to-RDD conversion."""
+    """fan_out must (a) still fan a one-file local scan to the session's
+    core count and (b) still no-op on an already-fanned frame."""
     d = catalog.load_table(spark, "/root/testdata/sf0.001", "documents")
     target = spark.sparkContext.defaultParallelism
     fanned = catalog.fan_out(d, spark)
     assert fanned.rdd.getNumPartitions() == target
     assert catalog.fan_out(fanned, spark) is fanned  # no double repartition
-    # many-files scale posture: identity without consulting df.rdd
-    many = d
-    real_input_files = type(d).inputFiles
-    try:
-        type(d).inputFiles = lambda self: [f"f{i}" for i in range(target)]
-        assert catalog.fan_out(many, spark) is many
-    finally:
-        type(d).inputFiles = real_input_files
 
 
 def test_q13_rides_prepared_statement_memo(spark):
@@ -272,6 +254,55 @@ def test_dir_derived_names_follow_the_dir(spark, tmp_path):
             shutil.rmtree(io_ops._scratch("s05_part", str(d)), ignore_errors=True)
 
 
+def test_rewritten_table_is_read_again(spark, tmp_path):
+    """A table rewritten in place under the same name is read again by
+    the session's next query: a02 over a copied dir matches its oracle
+    over the new file, not the rows its first run read."""
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "sf"
+    shutil.copytree(SF_DIR, d)
+    spec = registry._REGISTRY["a02_daily_rollup"]
+    events = pq.read_table(d / "events.parquet")
+    for rows in (events, events.slice(0, events.num_rows // 2)):
+        pq.write_table(rows, d / "events.parquet")
+        with duckdb.connect() as con:
+            con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet'")
+            assert_oracle_match(spec.fn(spark, str(d)), con, spec.oracle,
+                                name=f"a02 over {rows.num_rows} events")
+
+
+def test_warehouse_removed_at_exit(tmp_path):
+    """The per-process warehouse get_session creates is removed when the
+    process exits, managed tables included."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from smart_water_management_spark.session import get_session\n"
+        "from smart_water_management_spark.sources.catalog import warehouse_path\n"
+        "spark = get_session('warehouse-exit')\n"
+        "spark.range(3).write.saveAsTable('exit_probe')\n"
+        "path = warehouse_path(spark)\n"
+        "assert os.path.isdir(os.path.join(path, 'exit_probe'))\n"
+        "print(path)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_GRAFT_CPUS": "1",
+           "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    path = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(path).startswith("swm-warehouse-")
+    assert not os.path.exists(path)
+
+
 def test_streaming_replay_drops_its_view(spark, duck):
     """Each bounded replay drains into a uniquely named memory-sink view;
     the returned frame holds the sink itself, so the view is dropped at
@@ -310,17 +341,13 @@ def test_codegen_cache_holds_a_repeated_pass(spark):
 
     key = "spark.sql.codegen.cache.maxEntries"
     assert spark.conf.get(key) == ENGINE_CONF[key]
-    registry.set_posture("production")
-    try:
-        counts = []
-        for _ in range(2):
-            before = _compiles(spark)
-            for name in _BATCH_OPS:
-                registry._REGISTRY[name].fn(spark, SF_DIR) \
-                    .write.format("noop").mode("overwrite").save()
-            counts.append(_compiles(spark) - before)
-    finally:
-        registry.set_posture("auto")
+    counts = []
+    for _ in range(2):
+        before = _compiles(spark)
+        for name in _BATCH_OPS:
+            registry._REGISTRY[name].fn(spark, SF_DIR) \
+                .write.format("noop").mode("overwrite").save()
+        counts.append(_compiles(spark) - before)
     assert counts[1] == 0, f"compiles per run: {counts}"
 
 
@@ -332,12 +359,8 @@ def test_equal_stage_bodies_share_a_class(spark):
     from smart_water_management_spark.validation.checks import EVENTS_RULES
 
     n_pairs = len(EVENTS_RULES) * (len(EVENTS_RULES) - 1) // 2
-    registry.set_posture("production")
-    try:
-        before = _compiles(spark)
-        registry._REGISTRY["v19_rule_cooccurrence"].fn(spark, SF_DIR) \
-            .write.format("noop").mode("overwrite").save()
-        compiled = _compiles(spark) - before
-    finally:
-        registry.set_posture("auto")
+    before = _compiles(spark)
+    registry._REGISTRY["v19_rule_cooccurrence"].fn(spark, SF_DIR) \
+        .write.format("noop").mode("overwrite").save()
+    compiled = _compiles(spark) - before
     assert compiled < n_pairs, f"{compiled} classes for {n_pairs} equal branches"

@@ -12,7 +12,6 @@ local benchmark.
 from __future__ import annotations
 
 import collections
-import contextlib
 import dataclasses
 import json
 import os
@@ -20,7 +19,7 @@ import re
 
 import pytest
 
-from smart_water_management_spark import registry, state
+from smart_water_management_spark import state
 from smart_water_management_spark.registry import _REGISTRY
 
 from .conftest import SF_DIR
@@ -53,30 +52,21 @@ FINGERPRINT_KINDS = (
 _NODE = re.compile(r"^(?:[ :|]*[+:]- )?(?:\*\(\d+\) )?(\w+)", re.M)
 
 
-@contextlib.contextmanager
-def production_pass(spark):
-    """Plan under the at-scale posture: the small-input tuning (shuffle=8,
-    codegen off, cached scans) must not apply, and nothing an earlier
-    query memoized or pinned may leak into the plans."""
-    registry.set_posture("production")
+def start_plan_pass(spark):
+    """Plan from an empty session: nothing an earlier query memoized or
+    pinned may leak into the plans."""
     state.clear(spark)
     # frames a query persisted outside the store survive state.clear, and
     # once materialized their measured size changes later plans (joins
     # flip to broadcast), so the pass also starts from an empty cache
     spark.catalog.clearCache()
-    spark.conf.set("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        yield
-    finally:
-        registry.set_posture("auto")
 
 
 @pytest.fixture(autouse=True)
-def production_posture(spark):
-    """Plan assertions check the at-scale physical plans."""
-    with production_pass(spark):
-        yield
+def plan_pass(spark):
+    """Each plan assertion plans from an empty session."""
+    start_plan_pass(spark)
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -116,12 +106,12 @@ def natural_names() -> list[str]:
 
 
 def live_fingerprints(spark, names) -> dict[str, dict[str, int]]:
-    """Fingerprint each name's plan in one production pass, in order."""
-    with production_pass(spark):
-        return {
-            n: fingerprint(plan_of(_REGISTRY[n].fn(spark, SF_DIR), "simple"))
-            for n in names
-        }
+    """Fingerprint each name's plan in one plan pass, in order."""
+    start_plan_pass(spark)
+    return {
+        n: fingerprint(plan_of(_REGISTRY[n].fn(spark, SF_DIR), "simple"))
+        for n in names
+    }
 
 
 def recorded_fingerprints() -> dict:
@@ -218,32 +208,32 @@ def registry_audit(spark):
     fingerprint diff: every natural name, errors reported not swallowed.
     The walkers run on every name; per-test exception lists are applied
     at ASSERT time so the allowlists stay local to their audits. The
-    pass is the one ``live_fingerprints`` makes: ``production_pass``,
+    pass is the one ``live_fingerprints`` makes: ``start_plan_pass``,
     then every natural name in sorted order."""
     out = {
         "errors": [], "cartesian": [], "fingerprints": {},
         "low_ndv": {}, "global_win": {}, "bnlj": {},
     }
-    with production_pass(spark):
-        for name in natural_names():
-            try:
-                df = _REGISTRY[name].fn(spark, SF_DIR)
-                plan = plan_of(df, "simple")
-            except Exception as exc:  # noqa: BLE001 — reported, not swallowed
-                out["errors"].append(f"{name}: {type(exc).__name__}: {exc}")
-                continue
-            if "CartesianProduct" in plan:
-                out["cartesian"].append(name)
-            out["fingerprints"][name] = fingerprint(plan)
-            bad = low_ndv_partitioned_windows(df)
-            if bad:
-                out["low_ndv"][name] = bad
-            bad = unbounded_global_windows(df)
-            if bad:
-                out["global_win"][name] = bad
-            bad = unbounded_nested_loop_joins(df)
-            if bad:
-                out["bnlj"][name] = bad
+    start_plan_pass(spark)
+    for name in natural_names():
+        try:
+            df = _REGISTRY[name].fn(spark, SF_DIR)
+            plan = plan_of(df, "simple")
+        except Exception as exc:  # noqa: BLE001 — reported, not swallowed
+            out["errors"].append(f"{name}: {type(exc).__name__}: {exc}")
+            continue
+        if "CartesianProduct" in plan:
+            out["cartesian"].append(name)
+        out["fingerprints"][name] = fingerprint(plan)
+        bad = low_ndv_partitioned_windows(df)
+        if bad:
+            out["low_ndv"][name] = bad
+        bad = unbounded_global_windows(df)
+        if bad:
+            out["global_win"][name] = bad
+        bad = unbounded_nested_loop_joins(df)
+        if bad:
+            out["bnlj"][name] = bad
     return out
 
 

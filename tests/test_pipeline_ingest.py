@@ -385,25 +385,6 @@ def test_jdbc_identifier_quote_styles():
     assert _quote_ident("(SELECT 1) t", ('"', '"')) == "(SELECT 1) t"
 
 
-def test_tuned_conf_restore_includes_aqe(spark):
-    """tune_for_input flips AQE on for small inputs; a later large-input
-    query must restore the session's OWN setting (a session deliberately
-    running with AQE off must not have it silently pinned on)."""
-    from smart_water_management_spark import registry
-
-    own = {k: spark.conf.get(k) for k in registry._TUNED_CONFS}
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        registry.tune_for_input(spark, SF_DIR)  # small: overrides apply
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        registry.tune_for_input(spark, "/root/testdata/sf0.1")  # large: restore
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    finally:
-        for k, v in own.items():
-            spark.conf.set(k, v)
-        registry.tune_for_input(spark, SF_DIR)
-
-
 def test_surrogate_key_dense_unique_and_partitioning_invariant(spark):
     """plans.star_schema.surrogate_key: dense 1..N, unique, and a pure
     function of the natural key — the same assignment under a different

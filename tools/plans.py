@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Plan fingerprints: rewrite plans/fingerprints.json, or inspect plans.
 
-With no arguments, plans every natural registry name in one pass under
-the production posture (the same pass and counts the tier-1 test diffs
-against) and rewrites plans/fingerprints.json: one line per query with
-its node-kind counts, zeros omitted, plus the SF it was taken on.
+With no arguments, plans every natural registry name in one plan pass
+(the same pass and counts the tier-1 test diffs against) and rewrites
+plans/fingerprints.json: one line per query with its node-kind counts,
+zeros omitted, plus the SF it was taken on.
 
 With query names, prints each one's formatted physical plan and its
 counts instead, and writes nothing.
@@ -34,7 +34,7 @@ from tests.test_physical_plans import (  # noqa: E402
     live_fingerprints,
     natural_names,
     plan_of,
-    production_pass,
+    start_plan_pass,
 )
 
 
@@ -57,11 +57,11 @@ def main() -> None:
         write(live)
         print(f"wrote {FINGERPRINTS}: {len(live)} queries at {SF_NAME}")
     else:
-        with production_pass(spark):
-            for name in names:
-                df = _REGISTRY[name].fn(spark, SF_DIR)
-                print(plan_of(df, "formatted"))
-                print(f"{name}: {json.dumps(fingerprint(plan_of(df, 'simple')))}\n")
+        start_plan_pass(spark)
+        for name in names:
+            df = _REGISTRY[name].fn(spark, SF_DIR)
+            print(plan_of(df, "formatted"))
+            print(f"{name}: {json.dumps(fingerprint(plan_of(df, 'simple')))}\n")
     spark.stop()
 
 
