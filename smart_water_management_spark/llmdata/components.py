@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, pin_derived
 from .dedup import lsh_candidate_pairs, minhash_signatures, verify_jaccard
 
 MAX_ROUNDS = 20
@@ -139,15 +139,13 @@ def dedup_corpus(
     session still computes everything from the parquet inputs.
     """
     if sigs is None:
-        sigs = minhash_signatures(docs).persist()
+        sigs = minhash_signatures(docs)
 
     def build() -> DataFrame:
         pairs = verify_jaccard(docs, lsh_candidate_pairs(sigs), threshold)
         return connected_components(pairs)
 
     if cache_key is not None:
-        from ..sources.catalog import pin_derived
-
         comps = pin_derived(
             docs.sparkSession,
             cache_key,
@@ -366,8 +364,6 @@ def x69_canonical_by_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equals close-directly — connected_components symmetrizes
     # internally), so share the session pin under the same key instead
     # of re-running the label propagation
-    from ..sources.catalog import pin_derived
-
     comp = pin_derived(
         spark,
         sf_dir,
@@ -761,11 +757,14 @@ def x118_dedup_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sigs = pinned_corpus_signatures(spark, sf_dir)
-    pairs = verify_jaccard(docs, lsh_candidate_pairs(sigs)).persist()
+    pairs = pin_derived(
+        spark,
+        sf_dir,
+        "x118_pairs",
+        lambda: verify_jaccard(docs, lsh_candidate_pairs(sigs)),
+    )
     # r11: same pinned-signature pair graph as every dedup_corpus
     # consumer — share the session-pinned component table
-    from ..sources.catalog import pin_derived
-
     comps = pin_derived(
         spark,
         sf_dir,
@@ -1246,8 +1245,6 @@ def x145_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = verify_jaccard(docs, lsh_candidate_pairs(sigs))
     # r11: same pinned-signature pair graph as every dedup_corpus
     # consumer — share the session-pinned component table
-    from ..sources.catalog import pin_derived
-
     comps = pin_derived(
         spark,
         sf_dir,

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .. import state
 from ..registry import register
-from ..sources.catalog import fan_out, literal_df, load_table
+from ..sources.catalog import fan_out, literal_df, load_table, pin_derived
 
 N_QUERIES = 10
 TOP_K = 5
@@ -549,10 +549,14 @@ def semdedup_prune(
     """Core SemDeDup pass over (vec_id, label, e) rows; see x29."""
     assigned, _model = ivf_index(em, n_cells=n_cells, cache_key=cache_key)
     # the cell-assigned corpus feeds the pair join's both sides AND the
-    # final left-join base; unpersisted, the KMeans transform + embedding
-    # scan lineage would replay three times (LRU-evicted, caller-scoped —
-    # em is injectable so there is no (sf_dir, name) cache key to pin on)
-    assigned = assigned.persist()
+    # final left-join base; unpinned, the KMeans transform + embedding
+    # scan lineage replays three times. Only a caller naming the dataset
+    # (``cache_key``) gives the store a key to pin it under.
+    if cache_key is not None:
+        cells = assigned
+        assigned = pin_derived(
+            em.sparkSession, cache_key, f"semdedup_cells_{n_cells}", lambda: cells
+        )
     # per-row norms once, not per pair (cosine_prenorm — bit-identical)
     a = assigned.select(
         "cell", F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"),
@@ -753,8 +757,6 @@ def _x41_oracle() -> str:
     "buckets",
 )
 def x41_hyperplane_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.catalog import pin_derived
-
     em = fan_out(load_table(spark, sf_dir, "embeddings"), spark).select(
         "vec_id", _dbl("embedding").alias("e")
     )
@@ -829,8 +831,6 @@ def x41_hyperplane_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _label_dim_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned per-(label, dim) exact-decimal sum table shared by x48/x49."""
     from ..functions.numeric import dsum
-    from ..sources.catalog import pin_derived
-
     def build():
         em = fan_out(load_table(spark, sf_dir, "embeddings"), spark)
         return (
@@ -1327,8 +1327,6 @@ def ivfpq_exact_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the KMeans transform + encode mapInPandas per
     # invocation (ivf_index's build-once-serve-many contract; first use
     # per session still computes from parquet).
-    from ..sources.catalog import pin_derived
-
     code_df = pin_derived(
         spark,
         sf_dir,
@@ -2039,7 +2037,6 @@ def mutual_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     kNN edge build + label-propagation rounds at ~10 s per consumer,
     re-run identically by all three; same build-once-serve-many contract
     as ``ivf_index`` (first use per session computes from parquet)."""
-    from ..sources.catalog import pin_derived
     from .components import connected_components
 
     def build() -> DataFrame:

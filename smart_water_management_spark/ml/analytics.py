@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import state
 from ..functions.numeric import dsum, sql_davg, sql_dstddev, sql_dsum
-from ..registry import register
+from ..registry import register, share_oracle
 from ..sources.catalog import load_table
 
 SEED = 42
@@ -3685,27 +3685,10 @@ def page_hinkley_from_hourly(hourly_grid: DataFrame) -> DataFrame:
     )
 
 
-# Wire t29's oracle (streaming.jobs registers t29 BEFORE this module
-# imports; the streaming twin must carry m31's oracle verbatim so the
-# driver certifies state-merge + fold == batch under any slicing).
-import dataclasses as _dc  # noqa: E402
-
-from ..registry import _REGISTRY as _REG_FOR_T29  # noqa: E402
-
-if "t29_streaming_page_hinkley" in _REG_FOR_T29:
-    _REG_FOR_T29["t29_streaming_page_hinkley"] = _dc.replace(
-        _REG_FOR_T29["t29_streaming_page_hinkley"],
-        oracle=_REG_FOR_T29["m31_page_hinkley"].oracle,
-    )
-
-# Same late-binding for t30: w32's oracle certifies the streaming Hampel
-# monitor (operators.windows and streaming.jobs both import before this
-# module, so both names exist here).
-if "t30_streaming_hampel" in _REG_FOR_T29:
-    _REG_FOR_T29["t30_streaming_hampel"] = _dc.replace(
-        _REG_FOR_T29["t30_streaming_hampel"],
-        oracle=_REG_FOR_T29["w32_hampel_filter"].oracle,
-    )
+# streaming.jobs registers t29 BEFORE this module imports; the streaming
+# twin carries m31's oracle verbatim so the driver certifies state-merge +
+# fold == batch under any slicing.
+share_oracle("t29_streaming_page_hinkley", "m31_page_hinkley")
 
 
 # --- m32 (ext.): robust seasonal decomposition (median profile + MAD residuals) ------
@@ -4163,14 +4146,8 @@ def bootstrap_ci_from_hourly(hourly_grid: DataFrame) -> DataFrame:
     )
 
 
-# t31's late-bound oracle (must sit BELOW m34's registration — this
-# module tail runs after every registration above and after
-# streaming.jobs imported).
-if "t31_streaming_bootstrap_ci" in _REG_FOR_T29:
-    _REG_FOR_T29["t31_streaming_bootstrap_ci"] = _dc.replace(
-        _REG_FOR_T29["t31_streaming_bootstrap_ci"],
-        oracle=_REG_FOR_T29["m34_bootstrap_ci"].oracle,
-    )
+# t31's oracle is m34's (shared below m34's registration).
+share_oracle("t31_streaming_bootstrap_ci", "m34_bootstrap_ci")
 
 
 # --- m35 (ext.): Grubbs max-studentized-deviation outlier statistic -------------------
@@ -4377,16 +4354,8 @@ def multiple_regression_from_hourly(hourly: DataFrame) -> DataFrame:
     )
 
 
-# Late-bind t33's oracle: m36 registers at the END of this module, so the
-# wiring lives below it (the t29/t30 block above runs before m36 exists).
-if (
-    "t33_streaming_regression" in _REG_FOR_T29
-    and "m36_multiple_regression" in _REG_FOR_T29
-):
-    _REG_FOR_T29["t33_streaming_regression"] = _dc.replace(
-        _REG_FOR_T29["t33_streaming_regression"],
-        oracle=_REG_FOR_T29["m36_multiple_regression"].oracle,
-    )
+# t33's oracle is m36's (shared below m36's registration).
+share_oracle("t33_streaming_regression", "m36_multiple_regression")
 
 
 # --- m37 (ext.): Croston's method for intermittent demand -------------------------------
@@ -5706,15 +5675,9 @@ def pettitt_from_daily(daily: DataFrame) -> DataFrame:
     )
 
 
-# Same late-binding for t41: m44's oracle certifies the streaming
-# Pettitt monitor (streaming.jobs imports before this module; the
-# hourly state rolls up to m44's exact daily grid, so state-merge +
-# pettitt_from_daily == batch m44 under any slicing).
-if "t41_streaming_pettitt" in _REG_FOR_T29:
-    _REG_FOR_T29["t41_streaming_pettitt"] = _dc.replace(
-        _REG_FOR_T29["t41_streaming_pettitt"],
-        oracle=_REG_FOR_T29["m44_pettitt_test"].oracle,
-    )
+# t41's oracle is m44's: the hourly state rolls up to m44's exact daily
+# grid, so state-merge + pettitt_from_daily == batch m44 under any slicing.
+share_oracle("t41_streaming_pettitt", "m44_pettitt_test")
 
 
 # --- m45 (ext.): forecast combination (mean / median-of-3 ensembles) ---------------------

@@ -25,7 +25,7 @@ from ..functions.numeric import (
     sql_dsum,
 )
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, pin_derived
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -2646,10 +2646,13 @@ def a42_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("qx"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("dy"),
     )
-    cells = (
-        li.groupBy("qx", "dy")
-        .agg(F.count("*").cast("decimal(38,0)").alias("c"))
-        .persist()
+    cells = pin_derived(
+        spark,
+        sf_dir,
+        "a42_cells",
+        lambda: li.groupBy("qx", "dy").agg(
+            F.count("*").cast("decimal(38,0)").alias("c")
+        ),
     )
     a = cells.select(
         F.col("qx").alias("ax"), F.col("dy").alias("ay"),

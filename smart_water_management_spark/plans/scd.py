@@ -216,6 +216,7 @@ def t11_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.catalog import reset_managed_table
+    from ..streaming.jobs import drain
 
     table = "dim_customer_scd2_stream"
     reset_managed_table(spark, table)
@@ -235,7 +236,7 @@ def t11_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = merged.localCheckpoint(eager=True)  # break lineage on self-read
         staged.write.mode("overwrite").insertInto(table)
 
-    with tempfile.TemporaryDirectory() as src, tempfile.TemporaryDirectory() as ckpt:
+    with tempfile.TemporaryDirectory() as src:
         import time as _t
 
         changed.coalesce(1).write.parquet(os.path.join(src, "b0"))
@@ -253,13 +254,7 @@ def t11_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src + "/*")
         )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream, lambda w: w.foreachBatch(merge_batch))
     dim = spark.table(table)
     return dim.select(
         "c_custkey",

@@ -18,7 +18,7 @@ cast to double). Both engines then produce bit-identical doubles.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -69,6 +69,15 @@ def register_alias(alias: str, target: str) -> None:
         doc=f"driver-window alias of {target}: {spec.doc}",
         alias_of=target,
     )
+
+
+def share_oracle(twin: str, source: str) -> None:
+    """Give ``twin`` the oracle of ``source`` verbatim: a streaming twin
+    registers before the batch query whose oracle certifies it, so the
+    source's module wires it in. A missing name raises ``KeyError``, so a
+    renamed query fails the import instead of leaving its twin rows-only.
+    """
+    _REGISTRY[twin] = replace(_REGISTRY[twin], oracle=_REGISTRY[source].oracle)
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -35,7 +35,7 @@ from pyspark.sql.types import (
 
 from ..functions.numeric import dsum, sql_dsum
 from ..registry import register
-from .catalog import dir_tag, load_table, read_csv_with_schema
+from .catalog import dir_tag, load_table, pin_derived, read_csv_with_schema
 
 SCRATCH = os.path.join(os.path.dirname(__file__), "..", "..", "spark-warehouse", "scratch")
 
@@ -213,10 +213,13 @@ def s11_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(reference src/spark_etl.py:59, size-gated src/enhanced_spark_etl.py:134-140)",
 )
 def s12_cached_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .cache()
+    src = pin_derived(
+        spark,
+        sf_dir,
+        "s12_finished_orders",
+        lambda: load_table(spark, sf_dir, "orders").filter(
+            F.col("o_orderstatus") == "F"
+        ),
     )
     dsum = F.sum(F.col("o_totalprice").cast("decimal(27,6)")).cast("double")
     by_priority = src.groupBy(
@@ -226,7 +229,7 @@ def s12_cached_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("by_status").alias("grain"), F.col("o_orderstatus").alias("key")
     ).agg(F.count("*").alias("n"), dsum.alias("total"))
     # not unpersisted here: the driver's action must hit the cached scan;
-    # session teardown (spark.catalog.clearCache) reclaims it
+    # the session store owns it, so state.clear reclaims it
     return by_priority.unionByName(by_status)
 
 

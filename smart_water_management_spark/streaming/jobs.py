@@ -9,6 +9,17 @@ replay drains the whole source deterministically — which also makes the
 streaming path oracle-checkable against the batch twins in
 ``batch_windows``.
 
+Every bounded replay goes through three functions. ``staged_table_stream``
+stages one table of a data dir as a file-source stream paced one file per
+micro-batch. ``drain`` runs a stream to completion: it owns the throwaway
+checkpoint, the scoped state-partition count, the ``availableNow`` trigger
+and the wait, and a failed batch raises to its caller. ``fold_state`` is
+the trigger-maintained running aggregate: it creates the state tables,
+calls a job's merge per micro-batch, materializes every merged frame
+before writing any (so all of them read the pre-batch state) and returns
+the final state as frames the next replay's table reset cannot touch.
+A state maintainer is then only its merge and its table DDL.
+
 Scale posture: in production the file source becomes Kafka/queue with the
 same query body; watermark state is bounded per (window × key); the
 ``foreachBatch`` upsert gives exactly-once MERGE semantics into the
@@ -17,15 +28,28 @@ sensor-status table (T10).
 
 from __future__ import annotations
 
+import contextlib
+import os
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from .. import state
+from ..registry import get as _spec
 from ..registry import register
+from ..sources.catalog import (
+    dir_tag,
+    load_table,
+    normalize_event_ts,
+    reset_managed_table,
+    warehouse_path,
+)
 
 _DEC = "decimal(27,6)"
 
@@ -47,20 +71,22 @@ def _raw_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-def _stage_table_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
-    """Symlink-stage a table's parquet (file or multi-file directory) as
-    the directory a file-source stream reads.
+def staged_table_stream(
+    spark: SparkSession, sf_dir: str, table: str, schema: str | T.StructType
+) -> DataFrame:
+    """File-source stream over one table of ``sf_dir``, one file per
+    micro-batch (``maxFilesPerTrigger``, the analog of the reference's
+    refresh_minutes polling cadence).
 
-    The stage lives under the session warehouse (per process for
+    File stream sources need a *directory*, so the table's parquet (one
+    file or a multi-file directory) is symlink-staged; in production this
+    is the landing directory / Kafka topic and no staging exists. The
+    stage lives under the session warehouse (per process for
     ``get_session`` sessions) and is named by ``dir_tag``, so no other
     process relinks it mid-replay and two dirs with the same path string
     or base name never share one. Every call empties and relinks it: the
     dir's files may have changed since the last call.
     """
-    import os
-
-    from ..sources.catalog import dir_tag, warehouse_path
-
     stage = os.path.join(
         warehouse_path(spark), f"_stream_stage_{table}_{dir_tag(sf_dir)}"
     )
@@ -82,23 +108,16 @@ def _stage_table_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
             )
     else:
         os.symlink(target, os.path.join(stage, f"{table}.parquet"))
-    return stage
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1: file-source stream over the events table (replay semantics).
-
-    ``maxFilesPerTrigger`` is the micro-batch pacing knob (the analog of the
-    reference's refresh_minutes polling cadence).
-    """
+    """T1: file-source stream over the events table (replay semantics)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # File stream sources need a *directory*; stage the single parquet file
-    # behind a symlink dir (in production this is the landing directory /
-    # Kafka topic, so no staging exists).
-    stage = _stage_table_dir(spark, sf_dir, "events")
-    target = f"{sf_dir}/events.parquet"
-    from ..sources.catalog import normalize_event_ts
-
     # Footer-only batch read to learn the physical ts type (bigint = NANOS
     # via the legacy flag, timestamp_ntz = MICROS) — no data scan, but
     # still a parquet metadata round-trip per call, so memoize the dtype per
@@ -106,37 +125,129 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_dtype = state.memo(
         spark,
         ("events_ts_dtype", sf_dir),
-        lambda: spark.read.parquet(target).schema["ts"].dataType,
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet")
+        .schema["ts"]
+        .dataType,
     )
-    raw = (
-        spark.readStream.schema(_raw_schema(ts_dtype))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    raw = staged_table_stream(spark, sf_dir, "events", _raw_schema(ts_dtype))
     return raw.withColumn("ts", normalize_event_ts(raw))
 
 
-import contextlib
+# Every stateful streaming operator instantiates one state store PER
+# shuffle partition, and the count is baked into the checkpoint at first
+# batch — so a bounded local replay over MB-scale input should start with
+# a handful of stores, not a cluster-sized number (measured: the
+# stream-stream join replay is ~3x faster at 4 than at 32). Production
+# jobs with durable checkpoints size this to the cluster before first
+# start.
+_REPLAY_STATE_PARTITIONS = 4
 
 
 @contextlib.contextmanager
-def _replay_state_partitions(spark: SparkSession, n: int = 4):
-    """Scope a small state-partition count around a bounded replay.
-
-    Every stateful streaming operator instantiates one state store PER
-    shuffle partition, and the count is baked into the checkpoint at
-    first batch — so a bounded local replay over MB-scale input should
-    start with a handful of stores, not a cluster-sized number (measured:
-    the stream-stream join replay is ~3x faster at 4 than at 32).
-    Production jobs with durable checkpoints size this to the cluster
-    before first start; the conf is restored on exit.
-    """
+def _replay_state_partitions(spark: SparkSession):
+    """Scope ``_REPLAY_STATE_PARTITIONS`` around a bounded replay; the
+    session's own value is restored on exit, also when the replay fails."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_REPLAY_STATE_PARTITIONS))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def drain(
+    stream: DataFrame, sink: Callable[[DataStreamWriter], DataStreamWriter]
+) -> None:
+    """Run a bounded replay of ``stream`` to completion.
+
+    ``sink`` names where the rows go (a memory sink, a ``foreachBatch``
+    function); the drain owns the rest: a throwaway checkpoint, the scoped
+    state-partition count, ``availableNow`` (every file present at start,
+    then stop) and the wait. A failed micro-batch raises here, with the
+    query stopped and the session's partition count restored.
+    """
+    spark = stream.sparkSession
+    with tempfile.TemporaryDirectory() as checkpoint, _replay_state_partitions(
+        spark
+    ):
+        q = (
+            sink(stream.writeStream)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+
+def _in_session(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df``'s plan as a frame of ``spark``. A micro-batch frame belongs
+    to the stream's cloned session, whose confs (the replay's scoped
+    partition count among them) would otherwise govern every later use of
+    a frame held past the replay."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)
+
+
+def fold_state(
+    stream: DataFrame,
+    tables: dict[str, str],
+    merge: Callable[[SparkSession, DataFrame], dict[str, DataFrame]],
+    mode: str = "overwrite",
+) -> dict[str, DataFrame]:
+    """Fold ``stream`` into state tables, one ``merge`` per micro-batch.
+
+    ``tables`` maps each state table to its column DDL; every call resets
+    and recreates them. ``merge(session, batch_df)`` returns the frame to
+    write per table, reading the current state with ``session.table``.
+    Every returned frame is conformed to its table's columns (by position,
+    as ``insertInto`` matches) and materialized with ``localCheckpoint``
+    before any is written — which also breaks the lineage Spark refuses to
+    overwrite a table from — so all of them read the pre-batch state.
+    ``mode`` is ``overwrite`` (the frame is the whole new state) or
+    ``append`` (the frame is the batch's addition).
+
+    Returns each table's final state as the frames written: the last one,
+    or the union of all of them when appending; an empty frame of the
+    table's schema when the stream had no rows. They hold their own
+    blocks, so a later call that resets the tables cannot pull the files
+    from under a frame returned earlier. With a Delta/Iceberg catalog the
+    write becomes a real MERGE INTO.
+    """
+    spark = stream.sparkSession
+    schemas = {}
+    for name, ddl in tables.items():
+        reset_managed_table(spark, name)
+        spark.sql(f"CREATE TABLE {name} ({ddl}) USING parquet")
+        schemas[name] = spark.table(name).schema
+    held: dict[str, DataFrame] = {}
+
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+        frames = merge(batch_df.sparkSession, batch_df)
+        staged = {
+            name: frame.toDF(*schemas[name].names)
+            .select(*[F.col(f.name).cast(f.dataType) for f in schemas[name]])
+            .localCheckpoint(eager=True)
+            for name, frame in frames.items()
+        }
+        for name, frame in staged.items():
+            frame.write.mode(mode).insertInto(name)
+            frame = _in_session(spark, frame)
+            if mode == "append" and name in held:
+                frame = held[name].unionByName(frame)
+            held[name] = frame
+
+    drain(stream, lambda w: w.foreachBatch(fold_batch))
+    return {
+        name: held[name]
+        if name in held
+        else spark.createDataFrame([], schemas[name])
+        for name in tables
+    }
 
 
 def run_to_completion(
@@ -144,23 +255,17 @@ def run_to_completion(
 ) -> DataFrame:
     """Drain a bounded stream into an in-memory table, return the result.
 
-    availableNow + awaitTermination = deterministic full replay. Mode note:
-    with ``append``, windows still open at end-of-stream (not yet passed by
-    the watermark) are withheld — correct streaming semantics, but a
-    bounded replay that must equal the batch result uses ``complete``.
+    Mode note: with ``append``, windows still open at end-of-stream (not
+    yet passed by the watermark) are withheld — correct streaming
+    semantics, but a bounded replay that must equal the batch result uses
+    ``complete``.
     """
     spark = stream_df.sparkSession
     name = f"{query_name}_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream_df,
+        lambda w: w.outputMode(output_mode).format("memory").queryName(name),
+    )
     # The resolved frame holds the memory sink itself, so the uniquely
     # named temp view can go: left registered, every replay would keep
     # its full result alive for the rest of the session.
@@ -265,9 +370,7 @@ def t06_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
     return run_to_completion(sessions, "session_windows")
 
 
-def sensor_status_upsert_stream(
-    spark: SparkSession, sf_dir: str, target_table: str = "sensor_status"
-) -> DataFrame:
+def sensor_status_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T10: trigger-maintained running per-sensor status table, re-expressed
     as a foreachBatch MERGE (reference: PostgreSQL trigger
     sql/enhanced_data_schema.sql:566-591).
@@ -276,25 +379,16 @@ def sensor_status_upsert_stream(
     status table: counts summed, last_seen max'd — an idempotent upsert
     keyed on user_id (exactly-once via checkpoint + deterministic batch).
     """
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, target_table)
-    spark.sql(
-        f"""CREATE TABLE {target_table}
-            (user_id LONG, n_events LONG, n_errors LONG, last_seen TIMESTAMP)
-            USING parquet"""
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         agg = batch_df.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors"),
             F.max("ts").alias("last_seen"),
         )
-        sp = batch_df.sparkSession
-        existing = sp.table(target_table)
         merged = (
-            existing.unionByName(agg)
+            sp.table("sensor_status")
+            .unionByName(agg)
             .groupBy("user_id")
             .agg(
                 F.sum("n_events").alias("n_events"),
@@ -302,23 +396,16 @@ def sensor_status_upsert_stream(
                 F.max("last_seen").alias("last_seen"),
             )
         )
-        # Break lineage before overwriting the table we just read (Spark
-        # refuses to overwrite a target that feeds the plan). The status
-        # table is per-key-small, so the materialization is cheap; with a
-        # Delta/Iceberg catalog this becomes a real MERGE INTO.
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto(target_table)
+        return {"sensor_status": merged}
 
-    ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(target_table)
+    return fold_state(
+        read_event_stream(spark, sf_dir),
+        {
+            "sensor_status": "user_id LONG, n_events LONG, n_errors LONG, "
+            "last_seen TIMESTAMP"
+        },
+        merge,
+    )["sensor_status"]
 
 
 @register(
@@ -347,7 +434,6 @@ def t07_streaming_sensor_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 def late_event_split(
     spark: SparkSession,
     stream: DataFrame,
-    checkpoint: str,
     tolerance_seconds: int = 24 * 3600,
     ts_col: str = "ts",
     sink_dir: str | None = None,
@@ -366,12 +452,12 @@ def late_event_split(
     Driver state is one timestamp (the running max event time) — O(1)
     memory at any scale; each half flows executor→sink without touching
     the driver. Returns (on_time_df, late_df) reading the two sinks after
-    the bounded availableNow replay drains.
+    the bounded availableNow replay drains. The default ``sink_dir`` is a
+    fresh dir under the session warehouse, so it goes with the warehouse.
     """
-    import os
-    import tempfile
-
-    sink_dir = sink_dir or tempfile.mkdtemp(prefix="late_split_")
+    sink_dir = sink_dir or os.path.join(
+        warehouse_path(spark), f"_late_split_{uuid.uuid4().hex[:8]}"
+    )
     on_time_path = os.path.join(sink_dir, "on_time")
     late_path = os.path.join(sink_dir, "late")
     state = {"hwm": None}
@@ -394,13 +480,7 @@ def late_event_split(
         if batch_max is not None and (hwm is None or batch_max > hwm):
             state["hwm"] = batch_max
 
-    q = (
-        stream.writeStream.foreachBatch(split_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, lambda w: w.foreachBatch(split_batch))
     # explicit schema: an all-on-time run leaves the late sink with no
     # part files, which schema inference would reject
     return (
@@ -749,9 +829,7 @@ def t13_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- t14: incrementally-maintained KMV distinct sketch -----------------------
 
 
-def kmv_sketch_upsert_stream(
-    spark: SparkSession, sf_dir: str, target_table: str = "kmv_sketch_state"
-) -> DataFrame:
+def kmv_sketch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T14: a24's KMV distinct sketch maintained INCREMENTALLY by a
     streaming foreachBatch merge.
 
@@ -764,42 +842,25 @@ def kmv_sketch_upsert_stream(
     right distinct-count state for streams: bounded rows per key, no
     raw-data reprocessing, mergeable across restarts.
     """
-    from ..sources.catalog import reset_managed_table
-    from pyspark.sql import Window as W
-
-    reset_managed_table(spark, target_table)
-    spark.sql(
-        f"""CREATE TABLE {target_table}
-            (event_type STRING, hx STRING)
-            USING parquet"""
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         hx = F.substring(F.md5(F.col("user_id").cast("string")), 1, _KMV_HEX)
         partial = batch_df.select("event_type", hx.alias("hx")).distinct()
-        sp = batch_df.sparkSession
         wk = W.partitionBy("event_type").orderBy("hx")
         merged = (
-            sp.table(target_table)
+            sp.table("kmv_sketch_state")
             .unionByName(partial)
             .distinct()
             .withColumn("rn", F.row_number().over(wk))
             .filter(F.col("rn") <= KMV_K)
             .select("event_type", "hx")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto(target_table)
+        return {"kmv_sketch_state": merged}
 
-    ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(target_table)
+    return fold_state(
+        read_event_stream(spark, sf_dir),
+        {"kmv_sketch_state": "event_type STRING, hx STRING"},
+        merge,
+    )["kmv_sketch_state"]
 
 
 from ..operators.aggregations import _KMV_HEX, _KMV_SCALE, KMV_K  # noqa: E402
@@ -873,20 +934,8 @@ def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
         verify_jaccard,
     )
-    from ..sources.catalog import reset_managed_table
 
-    for t in ("lsh_docs_state", "lsh_pairs_state"):
-        reset_managed_table(spark, t)
-    spark.sql(
-        "CREATE TABLE lsh_docs_state (doc_id LONG, text STRING) USING parquet"
-    )
-    spark.sql(
-        "CREATE TABLE lsh_pairs_state "
-        "(doc_a LONG, doc_b LONG, jaccard DOUBLE) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         new_docs = batch_df.select("doc_id", "text")
         old_docs = sp.table("lsh_docs_state")
         all_docs = old_docs.unionByName(new_docs)
@@ -909,30 +958,27 @@ def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # member (the probe side), and every doc is new in exactly one
         # batch — the pair can only be generated in the batch where its
         # SECOND member arrives (the first member's signature is not in
-        # state before its own arrival), regardless of id order
-        verified = verify_jaccard(all_docs, cands)
-        staged_pairs = verified.localCheckpoint(eager=True)
-        staged_pairs.write.mode("append").insertInto("lsh_pairs_state")
-        staged_docs = new_docs.localCheckpoint(eager=True)
-        staged_docs.write.mode("append").insertInto("lsh_docs_state")
+        # state before its own arrival), regardless of id order. Both
+        # frames read the pre-batch docs: the fold materializes every frame
+        # before it writes any.
+        return {
+            "lsh_pairs_state": verify_jaccard(all_docs, cands),
+            "lsh_docs_state": new_docs,
+        }
 
-    stage = _stage_table_dir(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = staged_table_stream(
+        spark, sf_dir, "documents",
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("lsh_pairs_state")
+    return fold_state(
+        stream,
+        {
+            "lsh_docs_state": "doc_id LONG, text STRING",
+            "lsh_pairs_state": "doc_a LONG, doc_b LONG, jaccard DOUBLE",
+        },
+        merge,
+        mode="append",
+    )["lsh_pairs_state"]
 
 
 from ..llmdata.dedup import _x08_cte  # noqa: E402
@@ -961,7 +1007,9 @@ def t15_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..operators.aggregations import SQ_K  # noqa: E402
 
 
-def sample_quantile_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
+def sample_quantile_upsert_stream(
+    spark: SparkSession, sf_dir: str
+) -> dict[str, DataFrame]:
     """T17: a29's bottom-k-by-hash uniform sample maintained INCREMENTALLY
     by a streaming foreachBatch merge, alongside an exact running row
     count per key.
@@ -974,23 +1022,7 @@ def sample_quantile_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
     a29 sample for ANY micro-batch slicing, and the quantiles computed
     from it are bit-identical.
     """
-    from ..sources.catalog import reset_managed_table
-    from pyspark.sql import Window as W
-
-    reset_managed_table(spark, "sq_sample_state")
-    reset_managed_table(spark, "sq_count_state")
-    spark.sql(
-        """CREATE TABLE sq_sample_state
-           (event_type STRING, value DOUBLE, hx STRING, event_id BIGINT)
-           USING parquet"""
-    )
-    spark.sql(
-        """CREATE TABLE sq_count_state
-           (event_type STRING, n_total BIGINT) USING parquet"""
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         rows = batch_df.select(
             "event_type",
             "value",
@@ -1005,9 +1037,6 @@ def sample_quantile_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
             .filter(F.col("rn") <= SQ_K)
             .select("event_type", "value", "hx", "event_id")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("sq_sample_state")
-
         counts = (
             sp.table("sq_count_state")
             .unionByName(
@@ -1018,21 +1047,17 @@ def sample_quantile_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
             .groupBy("event_type")
             .agg(F.sum("n_total").alias("n_total"))
         )
-        staged_c = counts.localCheckpoint(eager=True)
-        staged_c.write.mode("overwrite").insertInto("sq_count_state")
+        return {"sq_sample_state": merged, "sq_count_state": counts}
 
-    ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
-from ..registry import get as _get_spec  # noqa: E402
+    return fold_state(
+        read_event_stream(spark, sf_dir),
+        {
+            "sq_sample_state": "event_type STRING, value DOUBLE, hx STRING, "
+            "event_id BIGINT",
+            "sq_count_state": "event_type STRING, n_total BIGINT",
+        },
+        merge,
+    )
 
 
 @register(
@@ -1040,7 +1065,7 @@ from ..registry import get as _get_spec  # noqa: E402
     # EXACTLY a29's oracle: the incremental bottom-k sample + running
     # count must land on the identical sketch (and therefore identical
     # nearest-rank quantiles) bit-for-bit.
-    oracle=_get_spec("a29_sample_quantile_sketch").oracle,
+    oracle=_spec("a29_sample_quantile_sketch").oracle,
     doc="T17: a29's sample-quantile sketch maintained incrementally via "
     "streaming foreachBatch — bounded state (k sample rows + 1 count row "
     "per key), merge-invariant bottom-k-by-hash, so the final "
@@ -1048,11 +1073,8 @@ from ..registry import get as _get_spec  # noqa: E402
     "certified by a29's own md5-deterministic oracle",
 )
 def t17_streaming_sample_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    sample_quantile_upsert_stream(spark, sf_dir)
-    kept = spark.table("sq_sample_state")
-    totals = spark.table("sq_count_state")
+    st = sample_quantile_upsert_stream(spark, sf_dir)
+    kept, totals = st["sq_sample_state"], st["sq_count_state"]
     sample = kept.join(F.broadcast(totals), "event_type").select(
         "event_type",
         "value",
@@ -1086,14 +1108,11 @@ def t17_streaming_sample_quantile(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- t18: stream-static point-in-time dimension join -------------------------
 
-from ..registry import get as _get_spec2  # noqa: E402
-
-
 @register(
     "t18_stream_static_pit_join",
     # EXACTLY j13's oracle: the stream-static join + complete-mode rollup
     # must land on the identical as-was report.
-    oracle=_get_spec2("j13_pit_scd2_lookup").oracle,
+    oracle=_spec("j13_pit_scd2_lookup").oracle,
     doc="T18: stream-STATIC join — the events stream joins the versioned "
     "SCD2 dimension (j13's fixture) with the point-in-time validity "
     "predicate per micro-batch (the dimension is a static broadcast; no "
@@ -1106,9 +1125,7 @@ from ..registry import get as _get_spec2  # noqa: E402
 def t18_stream_static_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numeric import dsum
     from ..operators.joins import _PIT_FLIP
-    from ..sources.catalog import load_table as _lt
-
-    cust = _lt(spark, sf_dir, "customer").filter(F.col("c_custkey") < 150)
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 150)
     flip = F.lit(_PIT_FLIP).cast("timestamp")
     v1 = cust.select(
         F.col("c_custkey").alias("d_user_id"),
@@ -1147,7 +1164,7 @@ def t18_stream_static_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 WRES_K = 20
 
 
-def weighted_reservoir_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
+def weighted_reservoir_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T19: the Efraimidis–Spirakis weighted reservoir (x92's primitive,
     here over events weighted by value) maintained INCREMENTALLY by a
     streaming foreachBatch merge.
@@ -1159,19 +1176,7 @@ def weighted_reservoir_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
     reservoir equals the single-pass batch draw for ANY micro-batch
     slicing.
     """
-    from pyspark.sql import Window as W
-
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "wres_state")
-    spark.sql(
-        """CREATE TABLE wres_state
-           (event_id BIGINT, event_type STRING, value DOUBLE,
-            sel_key DOUBLE) USING parquet"""
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         h = F.conv(
             F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
         ).cast("long")
@@ -1192,18 +1197,16 @@ def weighted_reservoir_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
             .filter(F.col("rn") <= WRES_K)
             .select("event_id", "event_type", "value", "sel_key")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("wres_state")
+        return {"wres_state": merged}
 
-    ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    return fold_state(
+        read_event_stream(spark, sf_dir),
+        {
+            "wres_state": "event_id BIGINT, event_type STRING, value DOUBLE, "
+            "sel_key DOUBLE"
+        },
+        merge,
+    )["wres_state"]
 
 
 @register(
@@ -1235,10 +1238,7 @@ def weighted_reservoir_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
     "keeps the draw fresh as data lands)",
 )
 def t19_stream_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    weighted_reservoir_upsert_stream(spark, sf_dir)
-    st = spark.table("wres_state")
+    st = weighted_reservoir_upsert_stream(spark, sf_dir)
     return st.select(
         F.row_number()
         .over(W.orderBy(F.desc("sel_key"), F.asc("event_id")))
@@ -1274,16 +1274,8 @@ def countmin_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     union + SUM per (seed, bucket). Counter addition is associative and
     commutative over integers, so the final grid equals the batch x46
     grid bit-for-bit for ANY micro-batch slicing."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "cms_grid_state")
-    spark.sql(
-        "CREATE TABLE cms_grid_state "
-        "(seed INT, bucket BIGINT, counter BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         wc = (
             batch_df.select(F.explode(_doc_tokens("text")).alias("w"))
             .groupBy("w")
@@ -1305,27 +1297,17 @@ def countmin_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("counter").alias("counter"))
             .select("seed", "bucket", "counter")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("cms_grid_state")
+        return {"cms_grid_state": merged}
 
-    stage = _stage_table_dir(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = staged_table_stream(
+        spark, sf_dir, "documents",
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("cms_grid_state")
+    return fold_state(
+        stream,
+        {"cms_grid_state": "seed INT, bucket BIGINT, counter BIGINT"},
+        merge,
+    )["cms_grid_state"]
 
 
 @register(
@@ -1380,23 +1362,13 @@ def ri_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     over disjoint row sets, so merge = SUM/SUM/MIN/MAX and the final
     state equals the batch v08 lineitem block for ANY slicing — the
     shape every streaming data-quality counter takes."""
-    from ..sources.catalog import load_table as _lt
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "ri_monitor_state")
-    spark.sql(
-        "CREATE TABLE ri_monitor_state "
-        "(n_rows BIGINT, n_orphans BIGINT, "
-        "min_orphan_key BIGINT, max_orphan_key BIGINT) USING parquet"
-    )
     parent_keys = (
-        _lt(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select(F.col("o_orderkey").alias("k"))
         .distinct()
     )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         orphans = batch_df.join(
             parent_keys, batch_df["l_orderkey"] == parent_keys["k"], "left_anti"
         )
@@ -1419,25 +1391,19 @@ def ri_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("max_orphan_key").cast("bigint").alias("max_orphan_key"),
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("ri_monitor_state")
+        return {"ri_monitor_state": merged}
 
-    stage = _stage_table_dir(spark, sf_dir, "lineitem")
-    stream = (
-        spark.readStream.schema("l_orderkey long")  # schema projection:
-        # the monitor needs only the FK column, parquet prunes the rest
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("ri_monitor_state")
+    # schema projection: the monitor needs only the FK column, parquet
+    # prunes the rest
+    stream = staged_table_stream(spark, sf_dir, "lineitem", "l_orderkey long")
+    return fold_state(
+        stream,
+        {
+            "ri_monitor_state": "n_rows BIGINT, n_orphans BIGINT, "
+            "min_orphan_key BIGINT, max_orphan_key BIGINT"
+        },
+        merge,
+    )["ri_monitor_state"]
 
 
 @register(
@@ -1492,17 +1458,8 @@ def stats_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing — and a planner consulting it mid-stream only ever
     over-includes (a day's min can only tighten downward), never
     wrongly skips."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "stats_manifest_state")
-    spark.sql(
-        "CREATE TABLE stats_manifest_state "
-        "(day STRING, n_rows BIGINT, min_value DOUBLE, max_value DOUBLE, "
-        "n_null_value BIGINT, min_ts STRING, max_ts STRING) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         partial = batch_df.groupBy(
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
                 "day"
@@ -1538,19 +1495,17 @@ def stats_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_null_value", "min_ts", "max_ts",
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("stats_manifest_state")
+        return {"stats_manifest_state": merged}
 
-    ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stats_manifest_state")
+    return fold_state(
+        read_event_stream(spark, sf_dir),
+        {
+            "stats_manifest_state": "day STRING, n_rows BIGINT, "
+            "min_value DOUBLE, max_value DOUBLE, n_null_value BIGINT, "
+            "min_ts STRING, max_ts STRING"
+        },
+        merge,
+    )["stats_manifest_state"]
 
 
 @register(
@@ -1609,16 +1564,8 @@ def bloom_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once replay — idempotent state, the strongest merge class
     (t14's k-min and t20's counters tolerate slicing; the bloom also
     tolerates duplicate delivery)."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "bloom_membership_state")
-    spark.sql(
-        "CREATE TABLE bloom_membership_state "
-        "(word_idx INT, word BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         members = batch_df.select("user_id").distinct()
         hashed = members.select(
             F.explode(
@@ -1642,19 +1589,13 @@ def bloom_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.bit_or("word").alias("word"))
             .select("word_idx", "word")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("bloom_membership_state")
+        return {"bloom_membership_state": merged}
 
-    ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("bloom_membership_state")
+    return fold_state(
+        read_event_stream(spark, sf_dir),
+        {"bloom_membership_state": "word_idx INT, word BIGINT"},
+        merge,
+    )["bloom_membership_state"]
 
 
 @register(
@@ -1717,11 +1658,9 @@ def bloom_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a streaming dedup puts in front of expensive state lookups",
 )
 def t23_streaming_bloom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.catalog import load_table as _lt
-
     words = bloom_state_stream(spark, sf_dir)
     members = (
-        _lt(spark, sf_dir, "events").select("user_id").distinct()
+        load_table(spark, sf_dir, "events").select("user_id").distinct()
     )
     probes = members.select(
         F.col("user_id").alias("pid"), F.lit(True).alias("is_member")
@@ -1790,16 +1729,8 @@ def ab_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     after any slicing equals the batch computation — the property that
     lets an experimentation dashboard read significance mid-flight
     without rescanning history."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "ab_monitor_state")
-    spark.sql(
-        "CREATE TABLE ab_monitor_state "
-        "(event_type STRING, arm INT, n BIGINT, conv BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         arm = (
             F.conv(
                 F.substring(F.md5(F.col("user_id").cast("string")), 1, 8),
@@ -1829,21 +1760,19 @@ def ab_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("conv").cast("bigint").alias("conv"),
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("ab_monitor_state")
+        return {"ab_monitor_state": merged}
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "event_type", "value"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("ab_monitor_state")
+    return fold_state(
+        stream,
+        {
+            "ab_monitor_state": "event_type STRING, arm INT, n BIGINT, "
+            "conv BIGINT"
+        },
+        merge,
+    )["ab_monitor_state"]
 
 
 @register(
@@ -1935,15 +1864,8 @@ def psi_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge = groupBy-SUM and state equals the batch histogram under any
     slicing. The reference distribution (corpus-wide) is derived from
     the SAME state by re-aggregation — no second pass over history."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "psi_monitor_state")
-    spark.sql(
-        "CREATE TABLE psi_monitor_state "
-        "(source STRING, bin BIGINT, n BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         from ..llmdata.curation import _X104_BIN_W, _X104_NBINS
         from ..llmdata.text import tokens
 
@@ -1967,24 +1889,16 @@ def psi_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("source", "bin")
             .agg(F.sum("n").cast("bigint").alias("n"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("psi_monitor_state")
+        return {"psi_monitor_state": merged}
 
-    stage = _stage_table_dir(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema("source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = staged_table_stream(
+        spark, sf_dir, "documents", "source string, text string"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("psi_monitor_state")
+    return fold_state(
+        stream,
+        {"psi_monitor_state": "source STRING, bin BIGINT, n BIGINT"},
+        merge,
+    )["psi_monitor_state"]
 
 
 def _t25_psi_from_state(state: DataFrame) -> DataFrame:
@@ -2091,16 +2005,8 @@ def hourly_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact and order-free, so state equals the batch hourly pre-agg
     under any slicing). The grid is calendar-bounded: types x hours,
     independent of traffic volume."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "hourly_state")
-    spark.sql(
-        "CREATE TABLE hourly_state "
-        "(event_type STRING, h BIGINT, hv DECIMAL(27,6)) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         h = F.floor(
             (F.unix_timestamp("ts") - F.lit(1704067200)) / F.lit(3600.0)
         ).cast("bigint")
@@ -2115,21 +2021,16 @@ def hourly_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "h")
             .agg(F.sum("hv").cast("decimal(27,6)").alias("hv"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("hourly_state")
+        return {"hourly_state": merged}
 
     stream = read_event_stream(spark, sf_dir).select(
         "event_type", "ts", "value"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("hourly_state")
+    return fold_state(
+        stream,
+        {"hourly_state": "event_type STRING, h BIGINT, hv DECIMAL(27,6)"},
+        merge,
+    )["hourly_state"]
 
 
 @register(
@@ -2205,16 +2106,8 @@ def first_touch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative, associative), so the state equals the batch first-touch
     table under any slicing and any replay. State is keyed by entity
     (one row per user x type) — the standard funnel-state shape."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "first_touch_state")
-    spark.sql(
-        "CREATE TABLE first_touch_state "
-        "(user_id BIGINT, event_type STRING, first_s BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         partial = batch_df.groupBy("user_id", "event_type").agg(
             F.min(F.unix_timestamp("ts")).cast("bigint").alias("first_s")
         )
@@ -2224,21 +2117,19 @@ def first_touch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("user_id", "event_type")
             .agg(F.min("first_s").cast("bigint").alias("first_s"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("first_touch_state")
+        return {"first_touch_state": merged}
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "event_type", "ts"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("first_touch_state")
+    return fold_state(
+        stream,
+        {
+            "first_touch_state": "user_id BIGINT, event_type STRING, "
+            "first_s BIGINT"
+        },
+        merge,
+    )["first_touch_state"]
 
 
 @register(
@@ -2343,16 +2234,8 @@ def mmd_moment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative and commutative, so the merged state equals the batch
     moment table bit-for-bit under ANY micro-batch slicing — and the
     finalized MMD matrix is certified by x127's own oracle."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "mmd_moment_state")
-    spark.sql(
-        "CREATE TABLE mmd_moment_state "
-        "(label INT, d INT, s BIGINT, c BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         partial = mmd_moment_sums(batch_df)
         merged = (
             sp.table("mmd_moment_state")
@@ -2364,26 +2247,17 @@ def mmd_moment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("label", "d", "s", "c")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("mmd_moment_state")
+        return {"mmd_moment_state": merged}
 
-    stage = _stage_table_dir(spark, sf_dir, "embeddings")
-    stream = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = staged_table_stream(
+        spark, sf_dir, "embeddings",
+        "vec_id long, embedding array<float>, label int",
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("mmd_moment_state")
+    return fold_state(
+        stream,
+        {"mmd_moment_state": "label INT, d INT, s BIGINT, c BIGINT"},
+        merge,
+    )["mmd_moment_state"]
 
 
 @register(
@@ -2417,7 +2291,7 @@ def t28_streaming_mmd_monitor(
     # exactly under any micro-batch slicing (t26's state maintainer),
     # and the PH fold is the SAME helper m31 uses — so m31's oracle is
     # this monitor's oracle verbatim.
-    oracle=None,  # set below: _REGISTRY["m31_page_hinkley"].oracle
+    oracle=None,  # m31's; ml.analytics shares it once m31 registers
     doc="T29: streaming Page-Hinkley drift monitor — m31's sequential "
     "running-mean drift test reading the incrementally-maintained "
     "exact-decimal hourly state (t26's maintainer: per-batch partial "
@@ -2434,12 +2308,6 @@ def t29_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     return page_hinkley_from_hourly(hourly_state_stream(spark, sf_dir))
 
 
-# t29's oracle is m31's verbatim; ml.analytics imports AFTER this module
-# and wires it in (right below m31's registration) so the optional-module
-# tolerance of the package __init__ is preserved (this module must import
-# even when ml.analytics is blocked — the partial-registry contract).
-
-
 # --- t30: streaming robust-outlier (Hampel) monitor ----------------------------------
 
 
@@ -2448,9 +2316,8 @@ def t29_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Equals batch w32 bit-for-bit: the hourly decimal grid merges
     # exactly (t26's maintainer) and the rolling median/MAD pass is the
     # SAME selection helper w32 uses — w32's oracle certifies the
-    # monitor (wired below the w32 module import, same late-binding as
-    # t29/m31).
-    oracle=None,  # set in operators/windows.py: w32's oracle verbatim
+    # monitor (operators.windows imports before this module).
+    oracle=_spec("w32_hampel_filter").oracle,
     doc="T30: streaming Hampel outlier monitor — w32's rolling "
     "median/MAD robust filter reading the incrementally-maintained "
     "exact-decimal hourly state. The robust companion to t04's "
@@ -2472,9 +2339,8 @@ def t30_streaming_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t31_streaming_bootstrap_ci",
     # Equals batch m34 bit-for-bit: the hourly decimal grid merges
     # exactly under any slicing and the md5-drawn Poisson resampling is
-    # a pure function of the grid — m34's oracle certifies the monitor
-    # (late-bound in ml/analytics, the t29/t30 wiring).
-    oracle=None,  # set in ml/analytics.py: m34's oracle verbatim
+    # a pure function of the grid — m34's oracle certifies the monitor.
+    oracle=None,  # m34's; ml.analytics shares it once m34 registers
     doc="T31: streaming bootstrap-CI monitor — m34's deterministic "
     "Poisson-bootstrap confidence band for each type's mean hourly "
     "demand, recomputed from the incrementally-maintained exact-"
@@ -2501,16 +2367,8 @@ def daily_flow_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free, so the state equals w34's batch grid under any slicing).
     The grid is calendar-bounded: cohorts x days, independent of volume."""
     from ..operators.windows import daily_flow_grid
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "daily_flow_state")
-    spark.sql(
-        "CREATE TABLE daily_flow_state "
-        "(cohort BIGINT, day BIGINT, flow DECIMAL(27,6)) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         partial = daily_flow_grid(batch_df)
         merged = (
             sp.table("daily_flow_state")
@@ -2519,21 +2377,16 @@ def daily_flow_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("flow").cast(_DEC).alias("flow"))
             .select("cohort", "day", "flow")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("daily_flow_state")
+        return {"daily_flow_state": merged}
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "event_type", "ts", "value"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("daily_flow_state")
+    return fold_state(
+        stream,
+        {"daily_flow_state": "cohort BIGINT, day BIGINT, flow DECIMAL(27,6)"},
+        merge,
+    )["daily_flow_state"]
 
 
 @register(
@@ -2541,8 +2394,8 @@ def daily_flow_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Equals batch w34 bit-for-bit: the daily decimal flow grid merges
     # exactly under any micro-batch slicing and the drawdown pass is
     # the SAME helper w34 uses — w34's oracle certifies the monitor
-    # (late-bound below; operators.windows imports before this module).
-    oracle=None,  # set below: w34's oracle verbatim
+    # (operators.windows imports before this module).
+    oracle=_spec("w34_max_drawdown").oracle,
     doc="T32: streaming max-drawdown monitor — w34's per-cohort "
     "signed-flow equity-curve drawdown recomputed from the "
     "incrementally-maintained exact-decimal daily grid, so the "
@@ -2557,21 +2410,6 @@ def t32_streaming_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drawdown_from_daily(daily_flow_state_stream(spark, sf_dir))
 
 
-# Wire t32's oracle: operators.windows imports BEFORE streaming.jobs in
-# the package __init__, so w34's registration is visible here; the guard
-# keeps the partial-registry tolerance (windows module absent => t32
-# stays rows-only rather than crashing the import).
-import dataclasses as _dc  # noqa: E402
-
-from ..registry import _REGISTRY as _REG_FOR_T32  # noqa: E402
-
-if "w34_max_drawdown" in _REG_FOR_T32 and "t32_streaming_drawdown" in _REG_FOR_T32:
-    _REG_FOR_T32["t32_streaming_drawdown"] = _dc.replace(
-        _REG_FOR_T32["t32_streaming_drawdown"],
-        oracle=_REG_FOR_T32["w34_max_drawdown"].oracle,
-    )
-
-
 # --- t33: streaming multiple-regression monitor -----------------------------------------
 
 
@@ -2580,8 +2418,8 @@ if "w34_max_drawdown" in _REG_FOR_T32 and "t32_streaming_drawdown" in _REG_FOR_T
     # Equals batch m36 bit-for-bit: the exact-decimal hourly grid merges
     # under any slicing (t26's maintainer) and the moment fold + Cramer
     # solve is the SAME helper m36 uses — m36's oracle certifies the
-    # monitor (late-bound in ml/analytics, the t29/t30/t31 wiring).
-    oracle=None,  # set in ml/analytics.py: m36's oracle verbatim
+    # monitor.
+    oracle=None,  # m36's; ml.analytics shares it once m36 registers
     doc="T33: streaming multiple-regression monitor — m36's closed-form "
     "(trend, weekend) OLS recomputed from the incrementally-"
     "maintained exact-decimal hourly state, so the demand model's "
@@ -2611,47 +2449,27 @@ def winnow_state_stream(
     and per-doc position counts once and APPENDS them — no re-scan, no
     overwrite; the union of appends equals the batch tables for any
     slicing (each doc lives in exactly one micro-batch)."""
-    from ..sources.catalog import reset_managed_table
+    from ..llmdata.text import winnow_doc_fingerprints, winnow_doc_positions
 
-    reset_managed_table(spark, "winnow_fp_state")
-    reset_managed_table(spark, "winnow_doc_state")
-    spark.sql(
-        "CREATE TABLE winnow_fp_state "
-        "(doc_id BIGINT, source STRING, fp STRING) USING parquet"
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
+        return {
+            "winnow_fp_state": winnow_doc_fingerprints(batch_df),
+            "winnow_doc_state": winnow_doc_positions(batch_df),
+        }
+
+    st = fold_state(
+        staged_table_stream(
+            spark, sf_dir, "documents",
+            "doc_id long, source string, text string, n_chars long",
+        ),
+        {
+            "winnow_fp_state": "doc_id BIGINT, source STRING, fp STRING",
+            "winnow_doc_state": "doc_id BIGINT, source STRING, npos BIGINT",
+        },
+        merge,
+        mode="append",
     )
-    spark.sql(
-        "CREATE TABLE winnow_doc_state "
-        "(doc_id BIGINT, source STRING, npos BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..llmdata.text import (
-            winnow_doc_fingerprints,
-            winnow_doc_positions,
-        )
-
-        fps = winnow_doc_fingerprints(batch_df).localCheckpoint(eager=True)
-        fps.write.mode("append").insertInto("winnow_fp_state")
-        pos = winnow_doc_positions(batch_df).localCheckpoint(eager=True)
-        pos.write.mode("append").insertInto("winnow_doc_state")
-
-    stage = _stage_table_dir(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, source string, text string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("winnow_fp_state"), spark.table("winnow_doc_state")
+    return st["winnow_fp_state"], st["winnow_doc_state"]
 
 
 @register(
@@ -2659,9 +2477,8 @@ def winnow_state_stream(
     # Equals batch x143 bit-for-bit: fingerprints are within-doc, so
     # appended partials equal the batch tables under any slicing, and
     # the finalize is the SAME helper x143 uses — x143's oracle
-    # certifies the monitor (late-bound at the tail of THIS module,
-    # ~20 lines below, because text imports before t34 registers).
-    oracle=None,  # late-bound at this module's tail: x143's oracle verbatim
+    # certifies the monitor (llmdata.text, imported above, registers it).
+    oracle=_spec("x143_winnowing_fingerprints").oracle,
     doc="T34: streaming winnowing-contamination monitor — x143's "
     "MOSS-fingerprint density + cross-source overlap report "
     "recomputed from incrementally APPENDED per-doc fingerprint "
@@ -2680,25 +2497,6 @@ def t34_streaming_winnow_monitor(
     return winnow_report(fps, pos)
 
 
-# Late-bind t34's oracle: this module itself imports llmdata.text above
-# (line ~1275), so x143 is already registered by the time this tail runs
-# — the twin carries x143's oracle verbatim, certifying state-append +
-# finalize == batch under any slicing (t29-t33's pattern, hosted here
-# because text imports BEFORE t34's registration, not after).
-import dataclasses as _dc  # noqa: E402
-
-from ..registry import _REGISTRY as _REG_FOR_T34  # noqa: E402
-
-if (
-    "t34_streaming_winnow_monitor" in _REG_FOR_T34
-    and "x143_winnowing_fingerprints" in _REG_FOR_T34
-):
-    _REG_FOR_T34["t34_streaming_winnow_monitor"] = _dc.replace(
-        _REG_FOR_T34["t34_streaming_winnow_monitor"],
-        oracle=_REG_FOR_T34["x143_winnowing_fingerprints"].oracle,
-    )
-
-
 # --- t35: streaming Mann-Whitney monitor ------------------------------------------------
 
 
@@ -2708,16 +2506,8 @@ def quantity_grid_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts merge by groupBy-SUM (integer-in-decimal addition is exact
     and order-free, so state equals the batch grid under any slicing).
     The grid is value-domain-bounded (~50 rows) regardless of traffic."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "quantity_grid_state")
-    spark.sql(
-        "CREATE TABLE quantity_grid_state "
-        "(v BIGINT, c_o DECIMAL(14,0), c_f DECIMAL(14,0)) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         partial = (
             batch_df.filter(F.col("l_linestatus").isin("O", "F"))
             .select(
@@ -2747,33 +2537,19 @@ def quantity_grid_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("c_f").cast("decimal(14,0)").alias("c_f"),
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("quantity_grid_state")
+        return {"quantity_grid_state": merged}
 
-    stage = _stage_table_dir(spark, sf_dir, "lineitem")
-    stream = (
-        spark.readStream.schema("l_quantity double, l_linestatus string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = staged_table_stream(
+        spark, sf_dir, "lineitem", "l_quantity double, l_linestatus string"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("quantity_grid_state")
-
-
-def _a48_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a48's oracle is present at this module's registration time — no
-    # late binding needed (unlike the t29-t33 analytics wiring).
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a48_mann_whitney"].oracle
+    return fold_state(
+        stream,
+        {
+            "quantity_grid_state": "v BIGINT, c_o DECIMAL(14,0), "
+            "c_f DECIMAL(14,0)"
+        },
+        merge,
+    )["quantity_grid_state"]
 
 
 @register(
@@ -2781,7 +2557,7 @@ def _a48_oracle() -> str:
     # Equals batch a48 bit-for-bit: the value-domain grid merges under
     # any slicing (cell counts are sums) and the finalize is the SAME
     # helper a48 uses — a48's oracle certifies the monitor.
-    oracle=_a48_oracle(),
+    oracle=_spec("a48_mann_whitney").oracle,
     doc="T35: streaming Mann-Whitney monitor — a48's two-sample rank "
     "test recomputed from the incrementally-maintained quantity grid, "
     "so the 'are open and finished orders drawing from the same "
@@ -2813,16 +2589,8 @@ def interval_span_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number of DISJOINT spans per user — bounded by coverage
     geometry, not traffic volume."""
     from ..operators.joins import coalesce_spans
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "interval_span_state")
-    spark.sql(
-        "CREATE TABLE interval_span_state "
-        "(user_id BIGINT, s BIGINT, e BIGINT, w BIGINT) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         partial = batch_df.select(
             "user_id",
             F.floor(F.unix_timestamp("ts")).cast("bigint").alias("s"),
@@ -2842,29 +2610,19 @@ def interval_span_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("span_end").alias("e"),
             F.col("n_intervals").alias("w"),
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("interval_span_state")
+        return {"interval_span_state": merged}
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("interval_span_state")
-
-
-def _j17_oracle() -> str:
-    # joins imports before streaming.jobs (package __init__ order), so
-    # j17's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["j17_interval_coalesce"].oracle
+    return fold_state(
+        stream,
+        {
+            "interval_span_state": "user_id BIGINT, s BIGINT, e BIGINT, "
+            "w BIGINT"
+        },
+        merge,
+    )["interval_span_state"]
 
 
 @register(
@@ -2873,7 +2631,7 @@ def _j17_oracle() -> str:
     # on interval sets and weight-mergeable with per-span counts, and
     # the finalize aggregates the SAME span table shape j17's helper
     # produces — j17's oracle certifies the monitor.
-    oracle=_j17_oracle(),
+    oracle=_spec("j17_interval_coalesce").oracle,
     doc="T36: streaming interval-coalesce monitor — j17's per-user "
     "span coverage report recomputed from incrementally re-coalesced "
     "span state, so SLA-coverage / downtime-merge dashboards refresh "
@@ -2910,20 +2668,12 @@ def t36_streaming_interval_coalesce(
 # --- t37: streaming Cliff's-delta effect-size monitor ------------------------------------
 
 
-def _a50_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a50's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a50_cliffs_delta"].oracle
-
-
 @register(
     "t37_streaming_cliffs_delta",
     # Equals batch a50 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, two monitors) and a50's
     # finalize helper — a50's oracle certifies the monitor.
-    oracle=_a50_oracle(),
+    oracle=_spec("a50_cliffs_delta").oracle,
     doc="T37: streaming Cliff's-delta monitor — a50's ordinal effect "
     "size recomputed from the SAME incrementally-maintained quantity "
     "grid t35 keeps for the Mann-Whitney z (one mergeable ~50-cell "
@@ -2944,20 +2694,12 @@ def t37_streaming_cliffs_delta(
 # --- t38: streaming Ansari-Bradley dispersion monitor --------------------------------------
 
 
-def _a53_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a53's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a53_ansari_bradley"].oracle
-
-
 @register(
     "t38_streaming_ansari_bradley",
     # Equals batch a53 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, three monitors) and a53's
     # finalize helper — a53's oracle certifies the monitor.
-    oracle=_a53_oracle(),
+    oracle=_spec("a53_ansari_bradley").oracle,
     doc="T38: streaming Ansari-Bradley monitor — a53's dispersion test "
     "recomputed from the SAME incrementally-maintained quantity grid "
     "t35/t37 keep, completing the streaming two-sample console: t35 "
@@ -2989,16 +2731,8 @@ def year_quantity_grid_stream(
     statistic argument as t35's quantity grid, with the year axis kept).
     State size is bounded by the (years x quantity-domain) product
     (~350 cells), never by traffic volume."""
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "year_quantity_grid_state")
-    spark.sql(
-        "CREATE TABLE year_quantity_grid_state "
-        "(yr BIGINT, v BIGINT, c DECIMAL(14,0)) USING parquet"
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def merge(sp: SparkSession, batch_df: DataFrame) -> dict[str, DataFrame]:
         partial = (
             batch_df.select(
                 F.year("l_shipdate").cast("bigint").alias("yr"),
@@ -3013,34 +2747,16 @@ def year_quantity_grid_stream(
             .groupBy("yr", "v")
             .agg(F.sum("c").cast("decimal(14,0)").alias("c"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto(
-            "year_quantity_grid_state"
-        )
+        return {"year_quantity_grid_state": merged}
 
-    stage = _stage_table_dir(spark, sf_dir, "lineitem")
-    stream = (
-        spark.readStream.schema("l_quantity double, l_shipdate timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = staged_table_stream(
+        spark, sf_dir, "lineitem", "l_quantity double, l_shipdate timestamp"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("year_quantity_grid_state")
-
-
-def _a51_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a51's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a51_gamma_somers_tauc"].oracle
+    return fold_state(
+        stream,
+        {"year_quantity_grid_state": "yr BIGINT, v BIGINT, c DECIMAL(14,0)"},
+        merge,
+    )["year_quantity_grid_state"]
 
 
 @register(
@@ -3048,7 +2764,7 @@ def _a51_oracle() -> str:
     # Equals batch a51 bit-for-bit: the (yr, v) contingency grid merges
     # under any slicing and the finalize is the SAME helper a51 uses —
     # a51's oracle certifies the monitor.
-    oracle=_a51_oracle(),
+    oracle=_spec("a51_gamma_somers_tauc").oracle,
     doc="T39: streaming ordinal-association monitor — a51's gamma / "
     "Somers' D / tau-c recomputed from an incrementally-maintained "
     "(year x quantity) contingency grid as line items stream in: a "
@@ -3073,20 +2789,12 @@ def t39_streaming_gamma_monitor(
 # --- t40: streaming Cramér-von Mises distribution-distance monitor -------------------------
 
 
-def _a55_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a55's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a55_cramer_von_mises"].oracle
-
-
 @register(
     "t40_streaming_cramer_von_mises",
     # Equals batch a55 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, four monitors) and a55's
     # finalize helper — a55's oracle certifies the monitor.
-    oracle=_a55_oracle(),
+    oracle=_spec("a55_cramer_von_mises").oracle,
     doc="T40: streaming Cramér-von Mises monitor — a55's whole-ECDF "
     "two-sample distance recomputed from the SAME incrementally-"
     "maintained quantity grid t35/t37/t38 keep, finishing the "
@@ -3114,11 +2822,9 @@ def t40_streaming_cramer_von_mises(
     # Equals batch m44 bit-for-bit: t26's exact-decimal hourly state
     # rolls up to the daily grid (decimal addition is associative, and
     # day = floor(h/24) is exact integer arithmetic), then m44's
-    # pettitt_from_daily finalize runs unchanged. ml.analytics imports
-    # AFTER this module, so m44's oracle is LATE-BOUND there (the
-    # t29/t30 pattern at analytics.py's foot) — the registered spec
-    # carries m44's oracle verbatim by the time the registry is read.
-    oracle=None,
+    # pettitt_from_daily finalize runs unchanged — m44's oracle
+    # certifies the monitor.
+    oracle=None,  # m44's; ml.analytics shares it once m44 registers
     doc="T41: streaming Pettitt changepoint monitor — m44's "
     "distribution-free break detector recomputed from the SAME "
     "incrementally-merged hourly decimal grid t26 maintains (one "
@@ -3150,21 +2856,13 @@ def t41_streaming_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- t42: streaming Page-trend monitor (hourly grid -> daily rollup) -----------------------
 
 
-def _a56_oracle() -> str:
-    # operators.aggregations imports before streaming.jobs (package
-    # __init__ order), so a56's oracle is present at registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a56_page_trend_test"].oracle
-
-
 @register(
     "t42_streaming_page_trend",
     # Equals batch a56 bit-for-bit: t26's exact-decimal hourly state
     # rolls up to the daily micro grid (t41's rollup device), then
     # a56's page_trend_from_daily finalize runs unchanged — a56's
     # oracle certifies the monitor.
-    oracle=_a56_oracle(),
+    oracle=_spec("a56_page_trend_test").oracle,
     doc="T42: streaming Page-trend monitor — a56's ordered weekday "
     "trend statistic recomputed from the SAME incrementally-merged "
     "hourly decimal state t26/t41 maintain (one state, three alarms: "
@@ -3196,20 +2894,12 @@ def t42_streaming_page_trend(
 # --- t43: streaming Anderson-Darling tail-divergence monitor -------------------------------
 
 
-def _a58_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__
-    # order), so a58's oracle is present at registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a58_anderson_darling"].oracle
-
-
 @register(
     "t43_streaming_anderson_darling",
     # Equals batch a58 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, five monitors) and a58's
     # finalize helper — a58's oracle certifies the monitor.
-    oracle=_a58_oracle(),
+    oracle=_spec("a58_anderson_darling").oracle,
     doc="T43: streaming Anderson-Darling monitor — a58's tail-weighted "
     "ECDF distance recomputed from the SAME incrementally-maintained "
     "quantity grid t35/t37/t38/t40 keep, completing the streaming "

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, pin_derived
 
 
 @dataclass(frozen=True)
@@ -1387,12 +1387,17 @@ def _v19_oracle() -> str:
 )
 def v19_rule_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    flags = ev.select(
-        *[
-            r.violation().cast("int").alias(f"f_{r.name}")
-            for r in EVENTS_RULES
-        ]
-    ).persist()
+    flags = pin_derived(
+        spark,
+        sf_dir,
+        "v19_flags",
+        lambda: ev.select(
+            *[
+                r.violation().cast("int").alias(f"f_{r.name}")
+                for r in EVENTS_RULES
+            ]
+        ),
+    )
     names = [r.name for r in EVENTS_RULES]
     out = None
     for i, a in enumerate(names):

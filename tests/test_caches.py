@@ -364,3 +364,20 @@ def test_equal_stage_bodies_share_a_class(spark):
         .write.format("noop").mode("overwrite").save()
     compiled = _compiles(spark) - before
     assert compiled < n_pairs, f"{compiled} classes for {n_pairs} equal branches"
+
+
+def test_query_persists_are_owned_by_the_store(spark):
+    """Frames a query persists for reuse go through the session store, so
+    ``state.clear`` leaves Spark's cache empty: a persist outside the
+    store outlives it, and once materialized its measured size can flip a
+    later query's join to broadcast."""
+    from smart_water_management_spark.llmdata.components import dedup_corpus
+
+    spark.catalog.clearCache()
+    for name in ("a42_kendall_tau", "v19_rule_cooccurrence", "s12_cached_reuse",
+                 "x39_incremental_lsh", "x105_triangle_count",
+                 "x118_dedup_idempotence", "x29_semdedup"):
+        registry._REGISTRY[name].fn(spark, SF_DIR).collect()
+    dedup_corpus(catalog.load_table(spark, SF_DIR, "documents")).collect()
+    state.clear(spark)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

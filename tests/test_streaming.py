@@ -15,7 +15,7 @@ from smart_water_management_spark.streaming.batch_windows import (
     t03_sessionization,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, assert_oracle_match
 
 
 def test_streaming_hourly_equals_batch(spark):
@@ -115,7 +115,7 @@ def test_late_event_split(spark):
 
     from smart_water_management_spark.streaming.jobs import late_event_split
 
-    with tempfile.TemporaryDirectory() as src, tempfile.TemporaryDirectory() as ckpt:
+    with tempfile.TemporaryDirectory() as src:
         batches = [
             [("2024-01-01 10:00:00", "a", 1.0), ("2024-01-01 12:30:00", "a", 1.0)],
             # 10:15 is > 1h behind the high-water mark (12:30) → quarantined;
@@ -132,15 +132,13 @@ def test_late_event_split(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(src + "/*")
         )
-        on_time, late = late_event_split(
-            spark, stream, ckpt, tolerance_seconds=3600
-        )
+        on_time, late = late_event_split(spark, stream, tolerance_seconds=3600)
         assert sorted(r.v for r in on_time.collect()) == [1.0, 1.0, 2.0]
         assert [r.v for r in late.collect()] == [100.0]
 
 
 def test_foreachbatch_status_upsert(spark):
-    status = jobs.sensor_status_upsert_stream(spark, SF_DIR, "test_sensor_status")
+    status = jobs.sensor_status_upsert_stream(spark, SF_DIR)
     rows = {r.user_id: r for r in status.collect()}
     from smart_water_management_spark.sources.catalog import load_table
 
@@ -1111,3 +1109,77 @@ def test_streaming_anderson_darling_multi_batch_equals_batch_a58(spark):
         want.n_f,
         want.a2_stat,
     )
+
+
+def test_held_state_frames_survive_a_later_replay(spark, tmp_path):
+    """A state maintainer's result holds its own state: t07, t14, t26 and
+    t29 built over one dir, then over a second dir (whose replays reset
+    the same state tables), each still match their own dir's oracle."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from smart_water_management_spark.registry import _REGISTRY
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    dirs = [tmp_path / "a", tmp_path / "b"]
+    for d, rows in zip(dirs, (events, events.slice(0, events.num_rows // 2))):
+        d.mkdir()
+        pq.write_table(rows, d / "events.parquet")
+    names = ("t07_streaming_sensor_status", "t14_streaming_kmv_sketch",
+             "t26_streaming_changepoint", "t29_streaming_page_hinkley")
+    held = [(d, n, _REGISTRY[n].fn(spark, str(d))) for d in dirs for n in names]
+    for d, name, df in held:
+        with duckdb.connect() as con:
+            con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet'")
+            assert_oracle_match(df, con, _REGISTRY[name].oracle,
+                                name=f"{name} over {d.name}")
+
+
+def test_failed_fold_raises_and_restores_the_session(spark):
+    """Failures are loud: a merge that raises stops the replay with the
+    error, and leaves no running query and the session's own shuffle
+    partition count behind."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def merge(session, batch_df):
+        raise ValueError("merge refused this batch")
+
+    with pytest.raises(Exception, match="merge refused this batch"):
+        jobs.fold_state(
+            jobs.read_event_stream(spark, SF_DIR),
+            {"failing_fold_state": "user_id LONG"},
+            merge,
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.streams.active == []
+
+
+def test_fold_over_an_empty_stream_returns_empty_state(spark, tmp_path):
+    """A replay with no input files still returns each state table's
+    final state: empty, with the table's columns."""
+    stream = spark.readStream.schema("user_id long").parquet(str(tmp_path))
+    out = jobs.fold_state(
+        stream,
+        {"empty_fold_state": "user_id LONG, n BIGINT"},
+        lambda session, batch_df: {"empty_fold_state": batch_df},
+    )["empty_fold_state"]
+    assert out.schema.simpleString() == "struct<user_id:bigint,n:bigint>"
+    assert out.collect() == []
+
+
+def test_streaming_twins_carry_their_sources_oracle():
+    """Each streaming twin whose oracle is shared from a batch query
+    carries that oracle verbatim (a missing name fails the import)."""
+    from smart_water_management_spark.registry import _REGISTRY
+
+    for twin, source in {
+        "t29_streaming_page_hinkley": "m31_page_hinkley",
+        "t30_streaming_hampel": "w32_hampel_filter",
+        "t31_streaming_bootstrap_ci": "m34_bootstrap_ci",
+        "t32_streaming_drawdown": "w34_max_drawdown",
+        "t33_streaming_regression": "m36_multiple_regression",
+        "t34_streaming_winnow_monitor": "x143_winnowing_fingerprints",
+        "t41_streaming_pettitt": "m44_pettitt_test",
+    }.items():
+        assert _REGISTRY[source].oracle, source
+        assert _REGISTRY[twin].oracle == _REGISTRY[source].oracle, twin
